@@ -7,6 +7,10 @@ they vectorize inside whole-stage codegen and scale linearly over a
 
 from __future__ import annotations
 
+import re
+import sys
+
+from pyspark import cloudpickle
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -42,8 +46,9 @@ def char_classes(col: str | Column) -> dict[str, Column]:
     return {"n_chars": total, "n_alpha": alpha, "n_digit": digit, "n_space": space, "n_punct": punct}
 
 
-def shingles(col: str | Column, k: int = 3) -> Column:
-    """Word k-shingles as an array of space-joined strings.
+def _gram_structs(col: str | Column, k: int) -> Column:
+    """Word k-grams of ``tokens(col)`` as an array of structs whose
+    fields ``0..k-1`` are the gram's tokens.
 
     Built by zipping ``k`` shifted slices of the token array rather
     than indexing inside a lambda: HOF lambdas re-evaluate captured
@@ -53,51 +58,130 @@ def shingles(col: str | Column, k: int = 3) -> Column:
     """
     t = tokens(col)
     cnt = F.greatest(F.size(t) - (k - 1), F.lit(0))
-    z = F.arrays_zip(*[F.slice(t, i + 1, cnt) for i in range(k)])
-    return F.transform(z, lambda s: F.concat_ws(" ", *[s[str(i)] for i in range(k)]))
+    return F.arrays_zip(*[F.slice(t, i + 1, cnt) for i in range(k)])
 
 
-def shingle_stream(
-    df, text_col: str, k: int, carry_cols, distinct=True, count_col=None
+def shingles(col: str | Column, k: int = 3) -> Column:
+    """Word k-shingles as an array of space-joined strings."""
+    return F.transform(
+        _gram_structs(col, k),
+        lambda s: F.concat_ws(" ", *[s[str(i)] for i in range(k)]),
+    )
+
+
+# Java's regex ``\s`` — the ASCII whitespace class Spark's
+# ``split(str, '\\s+')`` uses, NOT Python's unicode-aware ``\s``.
+# Every Python mirror of the JVM tokenizer splits on this.
+JAVA_WS = re.compile("[ \t\n\x0b\f\r]+")
+
+
+def java_tokens(text: str) -> list[str]:
+    """Python mirror of :func:`tokens` on one string: split on Java
+    ``\\s`` and drop the empty strings. Spark's ``trim`` strips ASCII
+    space only, and a leading or trailing separator only yields an
+    empty string here, so the trim inside :func:`tokens` needs no
+    mirror."""
+    return [w for w in JAVA_WS.split(text) if w]
+
+
+# Arrow generators run in Python workers that need not have this
+# package on their path: ship the helpers above by value.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
+
+# ngram_stream's arm choice: at or below this many scan bytes of its
+# input the zip-slice-explode expression runs, above it (or when the
+# size is unknown) the Arrow pass. Interleaved same-JVM A/B on 4 cores
+# (CHANGES.md): at sf0.01 (65 KB of documents) the four queries moved
+# from the Arrow pass to the expression won 7-8 of 8 pairs; at sf0.1
+# (594 KB) dedup_substring_coverage, moved from the expression to the
+# Arrow pass, won 8 of 8 (1.38 vs 2.32 s).
+NGRAM_ARROW_MIN_BYTES = 256 * 1024
+
+
+def ngram_stream(
+    df, text_col: str, k: int, carry_cols, names=None, distinct=False,
+    count_col=None,
 ):
-    """Exploded word k-shingle stream as an Arrow ``mapInPandas`` pass:
-    one output row per (doc, gram), carrying ``carry_cols`` alongside
-    the gram string ``g``. When ``count_col`` is set, every emitted row
-    additionally carries the doc's TOTAL gram count under that name
-    (``size(array_distinct(shingles(...)))`` when distinct, else the
-    occurrence count) — the decontam pattern, where the per-doc total
-    must ride the stream instead of paying a second corpus pass.
+    """Exploded word k-gram stream over ``tokens(lower(text_col))``:
+    one row per gram occurrence of each doc (per distinct gram, first
+    occurrence order, when ``distinct``), carrying ``carry_cols``.
+    The gram is emitted as the space-joined string ``g``, or, when
+    ``names`` is given, as ``k`` string columns with those names. With
+    ``count_col`` every row also carries its doc's total gram count
+    (distinct or occurrence, as emitted) under that name. Docs with a
+    NULL text or fewer than ``k`` tokens emit no row.
 
-    Exists because :func:`shingles`'s ``transform`` lambda — like every
-    array higher-order function — is CodegenFallback: the per-gram
-    ``concat_ws`` evaluates INTERPRETED, and a corpus-scale
-    ``explode(array_distinct(shingles(...)))`` spends ~18s per pass at
-    the 100x probe building 25M gram strings one interpreted eval at a
-    time (round-12 profile; the same diagnosis as the round-11 PQ
-    encode fix, similarity.py pq_encode). Plain Python string slicing
-    over Arrow batches is ~4x faster, and the pass stays narrow — no
-    shuffle, no join, partition-parallel.
+    Two arms with one row multiset, chosen by
+    ``catalog.scan_input_bytes(df)`` against
+    :data:`NGRAM_ARROW_MIN_BYTES`:
 
-    BIT-EQUALITY CONTRACT: the output row multiset must equal
-    ``df.select(*carry_cols, explode(array_distinct(shingles(lower(
-    trim(text_col)), k))))`` exactly — pinned by
-    tests/test_operators_golden.py::test_shingle_stream_matches_hof_spec.
-    The Python reimplementation mirrors the JVM semantics precisely:
-    ``trim`` strips ASCII space 0x20 only (Spark StringTrim's default),
-    ``lower`` is applied between the two trims, Java ``\\s`` is the
-    ASCII class [ \\t\\n\\x0B\\f\\r] (NOT Python's unicode-aware
-    ``\\s``), and ``array_distinct`` keeps first occurrence order.
+    * expression: ``explode`` of the zip-slice array
+      (:func:`shingles` for ``g``). No Python worker round-trip, but
+      the per-gram ``transform``/``arrays_zip`` kernels are
+      CodegenFallback and evaluate interpreted, which dominates at
+      corpus scale (24.3 s of text_trigram_backoff's 102.9 s and ~18 s
+      per kgram consumer at the 100x probe).
+    * Arrow: one narrow ``mapInPandas`` pass slicing the Python token
+      list (no shuffle, no join, partition-parallel), its input
+      partitioned by ``catalog.sized_for_expansion`` for the expanded
+      output.
+
+    BIT-EQUALITY CONTRACT: both arms emit the same row multiset —
+    pinned by tests/test_operators_golden.py::
+    test_ngram_stream_arrow_arm_matches_expression_arm. The Python
+    tokenizer mirrors the JVM: ``str.lower`` for ``lower``,
+    :func:`java_tokens` for ``tokens``, ``dict.fromkeys`` for
+    ``array_distinct``'s first-occurrence order.
     """
-    import re
+    from ..catalog import scan_input_bytes
 
+    carry_cols = list(carry_cols)
+    if names is not None and len(names) != k:
+        raise ValueError(f"ngram_stream: {len(names)} names for k={k}")
+    n_bytes = scan_input_bytes(df)
+    if n_bytes is not None and n_bytes <= NGRAM_ARROW_MIN_BYTES:
+        return _ngram_expression(
+            df, text_col, k, carry_cols, names, distinct, count_col
+        )
+    return _ngram_arrow(df, text_col, k, carry_cols, names, distinct, count_col)
+
+
+def _ngram_expression(df, text_col, k, carry_cols, names, distinct, count_col):
+    low = F.lower(F.col(text_col))
+    grams = _gram_structs(low, k) if names else shingles(low, k)
+    if distinct:
+        grams = F.array_distinct(grams)
+    # The gram array is evaluated once per doc, as the column _gs:
+    # written next to the explode, size(grams) would land in a
+    # projection above the Generate and re-evaluate the gram HOF once
+    # per emitted row. explode_outer + the NOT NULL filter (grams are
+    # never NULL) keep Spark from inferring a size(_gs) > 0 filter
+    # that it pushes below the projection, evaluating the HOF twice.
+    counted = [F.size("_gs").alias(count_col)] if count_col else []
+    out = (
+        df.select(*carry_cols, grams.alias("_gs"))
+        .select(*carry_cols, *counted, F.explode_outer("_gs").alias("g"))
+        .filter(F.col("g").isNotNull())
+    )
+    if not names:
+        return out
+    return out.select(
+        *carry_cols,
+        *([count_col] if count_col else []),
+        *[F.col(f"g.{j}").alias(name) for j, name in enumerate(names)],
+    )
+
+
+def _ngram_arrow(df, text_col, k, carry_cols, names, distinct, count_col):
     import numpy as np
 
-    ws_re = re.compile("[ \t\n\x0b\f\r]+")
-    carry_cols = list(carry_cols)
+    from ..catalog import sized_for_expansion
+
+    gram_cols = list(names) if names else ["g"]
     out_schema = ", ".join(
         [f"{c} {df.schema[c].dataType.simpleString()}" for c in carry_cols]
         + ([f"{count_col} int"] if count_col else [])
-        + ["g string"]
+        + [f"{c} string" for c in gram_cols]
     )
 
     # Cap yielded frames: one input batch of ~10k docs fans out to
@@ -109,116 +193,50 @@ def shingle_stream(
 
     def gen(batches):
         for pdf in batches:
-            texts = pdf[text_col]
             carry = pdf[carry_cols]
             out_idx: list[int] = []
             out_n: list[int] = []
-            out_g: list[str] = []
+            out_g: list[list[str]] = [[] for _ in gram_cols]
 
             def flush():
                 res = carry.iloc[out_idx].reset_index(drop=True)
                 if count_col:
                     res[count_col] = np.asarray(out_n, dtype="int32")
-                res["g"] = out_g
+                for name, vals in zip(gram_cols, out_g):
+                    res[name] = vals
                 return res
 
-            for i, t in enumerate(texts):
+            for i, t in enumerate(pdf[text_col]):
                 if t is None:
                     continue
-                low = t.strip(" ").lower().strip(" ")
-                toks = [w for w in ws_re.split(low) if w]
+                toks = java_tokens(t.lower())
                 n = len(toks) - (k - 1)
                 if n <= 0:
                     continue
-                grams = [" ".join(toks[j : j + k]) for j in range(n)]
+                # seqs[j][p] = token j of the gram at position p
+                seqs = [toks[j : j + n] for j in range(k)]
+                if not names:
+                    seqs = [[" ".join(g) for g in zip(*seqs)]]
                 if distinct:
-                    grams = list(dict.fromkeys(grams))
-                out_idx.extend([i] * len(grams))
+                    seqs = [list(c) for c in zip(*dict.fromkeys(zip(*seqs)))]
+                m = len(seqs[0])
+                out_idx.extend([i] * m)
                 if count_col:
-                    out_n.extend([len(grams)] * len(grams))
-                out_g.extend(grams)
+                    out_n.extend([m] * m)
+                for acc, seq in zip(out_g, seqs):
+                    acc.extend(seq)
                 if len(out_idx) >= FLUSH_ROWS:
                     yield flush()
-                    out_idx, out_n, out_g = [], [], []
+                    out_idx, out_n = [], []
+                    out_g = [[] for _ in gram_cols]
             if out_idx:
                 yield flush()
 
-    return df.select(*carry_cols, text_col).mapInPandas(gen, schema=out_schema)
-
-
-def ngram_cols_stream(df, text_col: str, k: int, carry_cols, names):
-    """Exploded word n-gram OCCURRENCE stream with the ``k`` gram
-    tokens as SEPARATE string columns (``names``), as an Arrow
-    ``mapInPandas`` pass: one output row per (doc, position), carrying
-    ``carry_cols`` alongside the token columns — the LM-query front
-    end (bigram/trigram occurrence streams feed count tables and the
-    per-doc scoring join as individual token keys, not concatenated
-    gram strings, so :func:`shingle_stream` does not fit).
-
-    Exists for the same reason as :func:`shingle_stream`: the
-    expression form ``explode(arrays_zip(slice(t,1,c), .., slice(t,k,
-    c)))`` builds a corpus-scale struct array through interpreted
-    array kernels — noop-isolated at 24.3 s of text_trigram_backoff's
-    102.9 s at the 100x probe (round-12 profile). Plain Python list
-    slicing over Arrow batches is ~4x faster and the pass stays
-    narrow: no shuffle, no join, partition-parallel.
-
-    BIT-EQUALITY CONTRACT: the output row multiset must equal::
-
-        df.select(*carry_cols, explode(arrays_zip(
-            *[slice(t, j+1, greatest(size(t)-(k-1), 0))
-              for j in range(k)])).alias("g"))
-          .select(*carry_cols, *[col(f"g.{j}") for j in range(k)])
-
-    with ``t = tokens(lower(text_col))`` — pinned by
-    tests/test_operators_golden.py::test_ngram_cols_stream_matches_spec.
-    Tokenization mirrors the JVM exactly as in shingle_stream (Java
-    ``\\s`` is the ASCII class, empty strings removed, lower before
-    split — the trim inside :func:`tokens` is a no-op for token
-    extraction since ``\\s+`` splits and empties are removed)."""
-    import re
-
-    ws_re = re.compile("[ \t\n\x0b\f\r]+")
-    carry_cols = list(carry_cols)
-    assert len(names) == k
-    out_schema = ", ".join(
-        [f"{c} {df.schema[c].dataType.simpleString()}" for c in carry_cols]
-        + [f"{name} string" for name in names]
-    )
-
-    FLUSH_ROWS = 131_072
-
-    def gen(batches):
-        for pdf in batches:
-            texts = pdf[text_col]
-            carry = pdf[carry_cols]
-            out_idx: list[int] = []
-            out_tok: list[list[str]] = [[] for _ in range(k)]
-
-            def flush():
-                res = carry.iloc[out_idx].reset_index(drop=True)
-                for j, name in enumerate(names):
-                    res[name] = out_tok[j]
-                return res
-
-            for i, t in enumerate(texts):
-                if t is None:
-                    continue
-                toks = [w for w in ws_re.split(t.lower()) if w]
-                n = len(toks) - (k - 1)
-                if n <= 0:
-                    continue
-                out_idx.extend([i] * n)
-                for j in range(k):
-                    out_tok[j].extend(toks[j : j + n])
-                if len(out_idx) >= FLUSH_ROWS:
-                    yield flush()
-                    out_idx = []
-                    out_tok = [[] for _ in range(k)]
-            if out_idx:
-                yield flush()
-
-    return df.select(*carry_cols, text_col).mapInPandas(gen, schema=out_schema)
+    # ~16x parquet bytes -> occurrence rows: rationale at
+    # catalog.sized_for_expansion (a defaultParallelism-sized layout
+    # OOMs the LM count aggs' map stage at the 1000x probe)
+    src = sized_for_expansion(df.select(*carry_cols, text_col), 16.0)
+    return src.mapInPandas(gen, schema=out_schema)
 
 
 def rolling_fingerprint(col: str | Column) -> Column:
@@ -316,11 +334,8 @@ def winnow_stream(df, text_col: str, id_col: str, carry_cols, k: int = 5, w: int
     (the JVM int sum never overflows on codepoints < 2327, which the
     ANSI session would reject anyway).
     """
-    import re
-
     import numpy as np
 
-    ws_re = re.compile("[ \t\n\x0b\f\r]+")
     carry_cols = list(carry_cols)
     out_schema = ", ".join(
         [f"{id_col} {df.schema[id_col].dataType.simpleString()}"]
@@ -339,7 +354,7 @@ def winnow_stream(df, text_col: str, id_col: str, carry_cols, k: int = 5, w: int
             for i, t in enumerate(texts):
                 if t is None:
                     continue
-                norm = ws_re.sub(" ", t.strip(" ").lower())
+                norm = JAVA_WS.sub(" ", t.strip(" ").lower())
                 n = len(norm)
                 if n < k or n - (k - 1) < w:
                     continue
@@ -475,7 +490,7 @@ def cdc_chunk_stream(df, text_col: str, id_col: str, carry_cols=(),
     Exists because the expression form (:func:`cdc_chunks`) pays, per
     run, a localCheckpoint barrier, a per-character interpreted
     ``transform(split(t,''), ascii)`` (HOF = CodegenFallback, the
-    shingle_stream diagnosis), a position-explode, a groupBy(doc)
+    ngram_stream diagnosis), a position-explode, a groupBy(doc)
     shuffle to collect cuts, and a join back to the text — all to
     compute a function that is row-local per document. Here the whole
     per-doc pipeline (normalize, rolling base-31 w-gram hash, cut,
@@ -495,11 +510,9 @@ def cdc_chunk_stream(df, text_col: str, id_col: str, carry_cols=(),
     (operators.dedup.portable_hash48).
     """
     import hashlib
-    import re
 
     import numpy as np
 
-    ws_re = re.compile("[ \t\n\x0b\f\r]+")
     carry_cols = list(carry_cols)
     sel = [id_col] + carry_cols
     out_schema = ", ".join(
@@ -523,7 +536,7 @@ def cdc_chunk_stream(df, text_col: str, id_col: str, carry_cols=(),
             for i, t in enumerate(texts):
                 if t is None:
                     continue
-                s = ws_re.sub(" ", t.strip(" ").lower())
+                s = JAVA_WS.sub(" ", t.strip(" ").lower())
                 n = len(s)
                 if n < 1:
                     continue

@@ -122,27 +122,12 @@ def dedup_substring_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     and still executes in one task-second."""
     from pyspark.sql.window import Window
 
-    from ..catalog import scan_input_bytes
-    from ..functions.text import shingle_stream, shingles
+    from ..functions.text import ngram_stream
 
     d = load_table(spark, sf_dir, "documents")
-    # Round-12: the gram occurrence stream is size-dispatched (the
-    # text_kgram_novelty pattern). The shuffles dominate this query,
-    # so the Arrow pass only pays above ~8 MB of scan input: measured
-    # sf0.1 1.59 (HOF) vs 1.9 s (Arrow — worker round-trip) but 100x
-    # probe 32.6 (HOF) vs 25.0 s (Arrow). Producers bit-equality-gated
-    # (distinct=False occurrence multiset), unknown scan size routes
-    # large.
-    n_bytes = scan_input_bytes(d)
-    if n_bytes is not None and n_bytes <= 8 * 1024 * 1024:
-        low = F.lower(F.trim(F.col("text")))
-        stream = d.select(
-            "doc_id", "source", F.explode(shingles(low, 5)).alias("gram")
-        )
-    else:
-        stream = shingle_stream(
-            d, "text", 5, ["doc_id", "source"], distinct=False
-        ).select("doc_id", "source", F.col("g").alias("gram"))
+    stream = ngram_stream(d, "text", 5, ["doc_id", "source"]).select(
+        "doc_id", "source", F.col("g").alias("gram")
+    )
     # One hash-partition on gram serves BOTH the (doc, gram) groupBy
     # (gram ⊆ grouping keys, so the clustered distribution is already
     # satisfied) and the corpus-duplication window below — the explicit
@@ -1028,7 +1013,7 @@ def _para_feature_rows_spec(d: DataFrame) -> DataFrame:
 
 
 def _para_feature_rows(d: DataFrame) -> DataFrame:
-    """Arrow producer of the paragraph feature rows (round 12).
+    """Arrow producer of the paragraph feature rows.
 
     The expression spec evaluates INTERPRETED per token: the sig
     column is 8 CodegenFallback ``transform`` lambdas, each invoking
@@ -1038,16 +1023,15 @@ def _para_feature_rows(d: DataFrame) -> DataFrame:
     per-task vocabulary memo: each distinct token's 8 seed hashes are
     computed ONCE per task instead of once per occurrence, which no
     JVM expression can do. Bit-equality mirrors of the JVM semantics:
-    ``trim`` strips ASCII space 0x20 only, Java ``\\s`` is
-    [ \\t\\n\\x0B\\f\\r], md5 hex is lowercase in both engines, and
-    the 48-bit int fits exactly in int64. The output rows are narrow
-    (two hash strings + 3 ints) — the paragraph token arrays never
-    leave the scan task, so the two window shuffles downstream carry
-    hashes, not text (guide §2.3)."""
+    tokens come from :func:`java_tokens`, md5 hex is lowercase in both
+    engines, and the 48-bit int fits exactly in int64. The output rows
+    are narrow (two hash strings + 3 ints) — the paragraph token
+    arrays never leave the scan task, so the two window shuffles
+    downstream carry hashes, not text (guide §2.3)."""
     import hashlib
-    import re
 
-    ws_re = re.compile("[ \t\n\x0b\f\r]+")
+    from ..functions.text import java_tokens
+
     seeds = [f"#m{j}".encode() for j in range(_PARA_SEEDS)]
     n_seeds = _PARA_SEEDS
     para = _PARA
@@ -1064,7 +1048,7 @@ def _para_feature_rows(d: DataFrame) -> DataFrame:
             ):
                 if txt is None:
                     continue
-                toks = [w for w in ws_re.split(txt.strip(" ")) if w]
+                toks = java_tokens(txt)
                 if not toks:
                     continue
                 for pidx in range((len(toks) + para - 1) // para):

@@ -23,7 +23,7 @@ from pyspark.sql.window import Window
 
 from ..catalog import load_table
 from ..functions.scalars import pin_dbl, pin_dec, sql_pin_dbl, sql_pin_dec
-from ..functions.text import shingle_stream, shingles, tokens
+from ..functions.text import java_tokens, ngram_stream, shingles, tokens
 from ..operators.dedup import portable_hash48, sql_portable_hash48
 from ..registry import register
 
@@ -81,29 +81,25 @@ def pipe_contamination_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     are never shuffled by gram, only by doc_id for the per-doc count,
     and that agg is map-side combinable.
 
-    Round-12: both gram streams come from the Arrow
-    ``shingle_stream`` pass (bit-equality-gated twin of
-    ``explode(array_distinct(shingles(lower(trim(text)), 3)))`` — the
-    text_kgram_novelty/CDC diagnosis: the HOF transform's per-gram
-    concat evaluates interpreted, and this query paid it over the
-    whole corpus twice; 73.5 -> ~26 s at the 100x probe). The doc_id
-    % benchmark split is pushed to the scans EXPLICITLY — mapInPandas
-    is opaque to the optimizer, so each branch filters before its
-    pass, preserving the old plan's pushdown.
+    Both gram streams come from :func:`ngram_stream` (distinct
+    per-doc trigrams of ``lower(text)`` — overlap is case-insensitive
+    even though the synthetic corpus is already lower, as in the
+    oracle). The doc_id % benchmark split is pushed to the scans
+    EXPLICITLY — the stream's Arrow arm is opaque to the optimizer, so
+    each branch filters before its pass.
     """
     d = load_table(spark, sf_dir, "documents")
-    # Lowercase before shingling (the oracle does too; shingle_stream
-    # applies lower(trim(.)) internally): overlap must be
-    # case-insensitive even though the synthetic corpus is already lower.
     bench = (
-        shingle_stream(
-            d.filter(F.col("doc_id") % _BENCH_MOD == 0), "text", 3, []
+        ngram_stream(
+            d.filter(F.col("doc_id") % _BENCH_MOD == 0), "text", 3, [],
+            distinct=True,
         )
         .select("g")
         .distinct()
     )
-    corpus = shingle_stream(
-        d.filter(F.col("doc_id") % _BENCH_MOD != 0), "text", 3, ["doc_id"]
+    corpus = ngram_stream(
+        d.filter(F.col("doc_id") % _BENCH_MOD != 0), "text", 3, ["doc_id"],
+        distinct=True,
     ).select("doc_id", "g")
     hits = (
         corpus.join(F.broadcast(bench.withColumn("_hit", F.lit(1))), "g", "left")
@@ -445,17 +441,14 @@ def pipe_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
                    ("the", "a", "of", "and", "to", "in", "is", "it", "for", "on")])
 
     raw = d.filter(F.col("doc_id") % _BENCH_MOD != 0)
-    # Round-12: the trigram work (previously TWO interpreted HOF
-    # evaluations per corpus doc — the gs array AND the dup3 distinct
-    # count — plus a third for the bench side) moved entirely onto the
-    # Arrow shingle_stream pass: the exploded corpus gram stream
-    # carries the per-doc distinct-gram total (count_col), so dup3's
-    # numerator and ratio's denominator both ride the SAME hit
-    # aggregation and the feature projection never builds a gram.
+    # All trigram work is the ngram_stream pass: the exploded corpus
+    # gram stream carries the per-doc distinct-gram total (count_col),
+    # so dup3's numerator and ratio's denominator both ride the SAME
+    # hit aggregation and the feature projection never builds a gram.
     # NULL n_gs (a doc whose filtered token stream has < 3 words, so
-    # zero gram rows) reproduces the old values exactly: dup3 NULL
-    # null-propagates to the same q=0 the old dup3=1.0 produced, and
-    # greatest(NULL, 1) = 1 matches greatest(size([]), 1).
+    # zero gram rows) gives the values of an empty gram array: dup3
+    # NULL null-propagates to q=0, and greatest(NULL, 1) = 1 matches
+    # greatest(size([]), 1).
     feats = raw.select(
         "doc_id",
         "source",
@@ -468,13 +461,16 @@ def pipe_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size(F.array_intersect(F.array_distinct(toks), sw)).alias("n_stop"),
     )
     bench = (
-        shingle_stream(
-            d.filter(F.col("doc_id") % _BENCH_MOD == 0), "text", 3, []
+        ngram_stream(
+            d.filter(F.col("doc_id") % _BENCH_MOD == 0), "text", 3, [],
+            distinct=True,
         )
         .distinct()
     )
     hits = (
-        shingle_stream(raw, "text", 3, ["doc_id"], count_col="n_gs")
+        ngram_stream(
+            raw, "text", 3, ["doc_id"], distinct=True, count_col="n_gs"
+        )
         .join(F.broadcast(bench.withColumn("_hit", F.lit(1))), "g", "left")
         .groupBy("doc_id")
         .agg(
@@ -947,19 +943,16 @@ def pipe_decontam_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefilter.
     """
     d = load_table(spark, sf_dir, "documents")
-    # Round-12: both gram streams come from the Arrow shingle_stream
-    # pass (bit-equality-gated twin of explode(array_distinct(
-    # shingles(lower(trim(text)), 3))) — the interpreted-HOF diagnosis
-    # of pipe_contamination_overlap applies verbatim); the doc_id %
-    # split is pushed to the scans explicitly because mapInPandas is
-    # opaque to the optimizer.
+    # The doc_id % split is pushed to the scans explicitly because the
+    # ngram_stream Arrow arm is opaque to the optimizer.
     # Materialized once: the tiny distinct gram set feeds BOTH the
     # Bloom build and the confirming semi-join broadcast — without the
     # barrier each consumer re-scans and re-shingles the full
     # documents table (the similarity.py ivf_topk convention).
     bench = (
-        shingle_stream(
-            d.filter(F.col("doc_id") % _BENCH_MOD == 0), "text", 3, []
+        ngram_stream(
+            d.filter(F.col("doc_id") % _BENCH_MOD == 0), "text", 3, [],
+            distinct=True,
         )
         .distinct()
         .localCheckpoint()
@@ -980,18 +973,19 @@ def pipe_decontam_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     bloom = words.agg(
         F.map_from_entries(F.collect_list(F.struct("w", "word"))).alias("bf")
     )
-    # One corpus gram pass (round 12, guide §2.3/§2.4): the per-doc
+    # One corpus gram pass (guide §2.3/§2.4): the per-doc
     # gram total rides the exploded stream as a carried column
-    # (shingle_stream's count_col) instead of a second full evaluation
+    # (ngram_stream's count_col) instead of a second full evaluation
     # of the gram build. Zero-hit docs never need their exact gram
     # count — floor(0/n*10) = 0 for every n — so they are recovered by
     # count arithmetic from a cheap token-count scan (no per-gram
     # concat): size(gs) > 0  <=>  size(tokens) >= 3.
-    corpus = shingle_stream(
+    corpus = ngram_stream(
         d.filter(F.col("doc_id") % _BENCH_MOD != 0),
         "text",
         3,
         ["doc_id"],
+        distinct=True,
         count_col="n_grams",
     ).select("doc_id", "n_grams", "g")
     probe = corpus.crossJoin(F.broadcast(bloom)).select(
@@ -1182,7 +1176,7 @@ def _dsir_occurrence_rows(d: DataFrame, bucket_fn) -> DataFrame:
 
 def _dsir_portable_bucket_rows(d: DataFrame) -> DataFrame:
     """Arrow producer of PER-DOC bucket counts under
-    ``portable_hash48(g, "dsir") % _DSIR_B`` (round 12).
+    ``portable_hash48(g, "dsir") % _DSIR_B``.
 
     The expression path pays twice per bigram OCCURRENCE: the
     shingles() transform's per-gram concat is CodegenFallback
@@ -1193,17 +1187,14 @@ def _dsir_portable_bucket_rows(d: DataFrame) -> DataFrame:
     to per-doc bucket counts before they ever leave the scan task
     (<= min(bigrams, 256) rows per doc instead of one per occurrence),
     so both downstream aggregations read narrow pre-collapsed ints
-    (guide §2.3/§4.2). JVM semantics mirrored bit-for-bit: Spark
-    ``trim`` strips ASCII space only, Java ``\\s`` is
-    [ \\t\\n\\x0B\\f\\r], bigrams are space-joined adjacent tokens of
-    lower(trim(text)), hash input is ``g + "#dsir"`` UTF-8, bucket =
+    (guide §2.3/§4.2). JVM semantics mirrored bit-for-bit: bigrams are
+    space-joined adjacent :func:`java_tokens` of lower(trim(text)),
+    hash input is ``g + "#dsir"`` UTF-8, bucket =
     first-12-hex-digits int % 256. Golden-gated against the expression
     spec (tests/test_operators_golden.py::
     test_dsir_bucket_rows_match_expression_spec)."""
     import hashlib
-    import re
 
-    ws_re = re.compile("[ \t\n\x0b\f\r]+")
     B = _DSIR_B
 
     def gen(batches):
@@ -1217,11 +1208,7 @@ def _dsir_portable_bucket_rows(d: DataFrame) -> DataFrame:
             ):
                 if txt is None:
                     continue
-                toks = [
-                    w
-                    for w in ws_re.split(txt.strip(" ").lower().strip(" "))
-                    if w
-                ]
+                toks = java_tokens(txt.lower())
                 if len(toks) < 2:
                     continue
                 counts: dict[int, int] = {}

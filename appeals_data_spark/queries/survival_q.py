@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..catalog import load_table
+from ..catalog import load_table, scan_input_bytes
 from ..functions.scalars import (
     fiscal_year,
     pin_dbl,
@@ -1753,10 +1753,22 @@ def _bt_oracle(iters: int = 3) -> str:
     return "".join(parts)
 
 
-def _bt_unit(li: DataFrame) -> DataFrame:
-    return li.groupBy(
-        F.col("l_partkey").alias("pk"), F.col("l_suppkey").alias("sk")
-    ).agg(F.min(F.col("l_extendedprice") / F.col("l_quantity")).alias("u"))
+def _bt_unit(li: DataFrame, repartition_pk: bool) -> DataFrame:
+    """Minimum unit price ``u = l_extendedprice / l_quantity`` per
+    (pk, sk) — the one definition both pair generators compare. With
+    ``repartition_pk`` the projected rows are hash-placed on pk before
+    the aggregate (the exploded arm, whose per-part grouping reuses
+    that placement); without, the aggregate keeps its map-side partial
+    (the chunked arm: ~7 lineitems per (pk, sk) at TPC-H density, so
+    the partial is the scale path's shuffle reduction)."""
+    rows = li.select(
+        F.col("l_partkey").alias("pk"),
+        F.col("l_suppkey").alias("sk"),
+        (F.col("l_extendedprice") / F.col("l_quantity")).alias("r"),
+    )
+    if repartition_pk:
+        rows = rows.repartition("pk")
+    return rows.groupBy("pk", "sk").agg(F.min("r").alias("u"))
 
 
 def bt_pair_stats_exploded(li: DataFrame) -> DataFrame:
@@ -1771,23 +1783,13 @@ def bt_pair_stats_exploded(li: DataFrame) -> DataFrame:
     key set outgrows memory — the measured >58 GB disk cost that made
     sf100 the registry's only 1000x DNF (round-10 verdict).
 
-    Round 13 (guide §2.4 — share one exchange between same-keyed
-    operations): one explicit repartition on pk feeds BOTH
-    aggregations — HashPartitioning(pk) satisfies the (pk, sk) unit
-    agg's clustering (pk is a prefix) and the per-part collect_list's,
-    so the old back-to-back (pk, sk) and (pk) exchanges collapse into
-    one projected 3-column shuffle. Measured at sf0.1: pair-stats
-    1.84 -> 1.56 s, identical 499,500 (sa, sb, n, w) rows."""
-    unit = (
-        li.select(
-            F.col("l_partkey").alias("pk"),
-            F.col("l_suppkey").alias("sk"),
-            (F.col("l_extendedprice") / F.col("l_quantity")).alias("r"),
-        )
-        .repartition("pk")
-        .groupBy("pk", "sk")
-        .agg(F.min("r").alias("u"))
-    )
+    One explicit repartition on pk feeds BOTH aggregations (guide
+    §2.4 — share one exchange between same-keyed operations):
+    HashPartitioning(pk) satisfies the (pk, sk) unit agg's clustering
+    (pk is a prefix) and the per-part collect_list's, so one projected
+    3-column shuffle serves both. Measured at sf0.1: pair-stats
+    1.84 -> 1.56 s against separate (pk, sk) and (pk) exchanges."""
+    unit = _bt_unit(li, repartition_pk=True)
     grouped = unit.groupBy("pk").agg(
         F.sort_array(F.collect_list(F.struct("sk", "u"))).alias("xs")
     )
@@ -1821,20 +1823,12 @@ def bt_pair_stats_exploded(li: DataFrame) -> DataFrame:
 BT_EXPLODED_MAX_BYTES = 256 * 1024 * 1024
 
 
-def _input_bytes(df: DataFrame) -> int | None:
-    """Scan bytes under ``df`` (None = unknown = treat as LARGE);
-    shared implementation in catalog.scan_input_bytes."""
-    from ..catalog import scan_input_bytes
-
-    return scan_input_bytes(df)
-
-
 def bt_pair_stats(li: DataFrame) -> DataFrame:
     """Bradley-Terry pair statistics (sa < sb, #comparisons n, #wins w)
     from lineitem — the distributed half of pref_bradley_terry, shared
     with the size gate in tests/test_properties.py.
 
-    Size-dispatched (round-12 verdict item #3): below
+    Size-dispatched: below
     ``BT_EXPLODED_MAX_BYTES`` of scan input the exploded JVM generator
     runs (whole-stage-codegen posexplode, no Python boundary — the
     small-SF steady winner); above it the chunk-aggregated Arrow path
@@ -1843,7 +1837,7 @@ def bt_pair_stats(li: DataFrame) -> DataFrame:
     other (tests/test_properties.py::
     test_bt_pair_stats_chunked_equals_exploded_reference), so the
     dispatch point can never change a result, only a plan."""
-    nbytes = _input_bytes(li)
+    nbytes = scan_input_bytes(li)
     if nbytes is not None and nbytes <= BT_EXPLODED_MAX_BYTES:
         return bt_pair_stats_exploded(li)
     return bt_pair_stats_chunked(li)
@@ -1882,7 +1876,7 @@ def bt_pair_stats_chunked(li: DataFrame) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    unit = _bt_unit(li)
+    unit = _bt_unit(li, repartition_pk=False)
     FLUSH = 4_000_000
 
     def gen(batches):

@@ -17,6 +17,7 @@ from ..functions.text import (
     cdc_chunk_stream,
     char_classes,
     lang_id_heuristic,
+    ngram_stream,
     stopword_ratio,
     token_count,
     tokens,
@@ -368,26 +369,22 @@ def text_gopher_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
     (mean word length = non-space chars / words, avoiding a per-word
     fold; repetition = 1 - distinct/total shingles).
 
-    Round-12: the repetition feature's gram work left the interpreted
-    HOF (`shingles` is CodegenFallback and was evaluated THREE times
-    per doc — the >0 guard, the denominator, and the distinct count;
-    43.0 s of the 100x probe). The TOTAL shingle count is pure
-    arithmetic — ``size(shingles(t,3)) == greatest(size(tokens)-2,0)``
-    by construction (arrays_zip of equal-length slices) — and the
-    DISTINCT count comes from the Arrow ``shingle_stream`` pass
-    collapsed map-side to one row per doc, joined back on doc_id (a
-    doc-count-sized exchange replacing corpus-scale interpreted
-    eval). A left-join NULL distinct count occurs exactly when the doc
-    has zero grams, which the ``total > 0`` guard already routes to
-    dup3 = 0.0 — value-identical row by row."""
-    from ..functions.text import shingle_stream, tokens
-
+    The repetition feature never builds a gram in the projection: the
+    TOTAL shingle count is pure arithmetic —
+    ``size(shingles(t,3)) == greatest(size(tokens)-2,0)`` by
+    construction (arrays_zip of equal-length slices) — and the
+    DISTINCT count comes from the :func:`ngram_stream` pass collapsed
+    map-side to one row per doc, joined back on doc_id (a
+    doc-count-sized exchange instead of the interpreted HOF evaluated
+    three times per doc). A left-join NULL distinct count occurs
+    exactly when the doc has zero grams, which the ``total > 0`` guard
+    already routes to dup3 = 0.0 — value-identical row by row."""
     d = load_table(spark, sf_dir, "documents")
     low = F.lower(F.trim(F.col("text")))
     toks = F.split(low, r"\s+")
     sh_total = F.greatest(F.size(tokens(low)) - 2, F.lit(0))
     dcounts = (
-        shingle_stream(d, "text", 3, ["doc_id"])
+        ngram_stream(d, "text", 3, ["doc_id"], distinct=True)
         .groupBy("doc_id")
         .agg(F.count("*").alias("_n_distinct"))
     )
@@ -791,12 +788,12 @@ def _top2gram_stats(d: DataFrame) -> DataFrame:
     .filter(wc>=2) -> explode -> groupBy(doc,gram).count ->
     groupBy(doc).max`` — pinned by tests/test_operators_golden.py::
     test_top2gram_stats_match_expression_spec. All outputs are ints.
-    JVM semantics mirrored as in shingle_stream (ASCII-space trim,
-    Java \\s token split)."""
-    import re
+    Tokens come from :func:`java_tokens`, the shared Python mirror of
+    the JVM tokenizer."""
     from collections import Counter
 
-    ws_re = re.compile("[ \t\n\x0b\f\r]+")
+    from ..functions.text import java_tokens
+
     out_schema = (
         "doc_id " + d.schema["doc_id"].dataType.simpleString()
         + ", source " + d.schema["source"].dataType.simpleString()
@@ -811,8 +808,7 @@ def _top2gram_stats(d: DataFrame) -> DataFrame:
             for did, src, t in zip(pdf["doc_id"], pdf["source"], pdf["text"]):
                 if t is None:
                     continue
-                low = t.strip(" ").lower()
-                toks = [w for w in ws_re.split(low) if w]
+                toks = java_tokens(t.lower())
                 wc = len(toks)
                 if wc < 2:
                     continue
@@ -1549,70 +1545,21 @@ def text_bigram_interp_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.functions import broadcast
 
     d = load_table(spark, sf_dir, "documents")
-    t = tokens(F.lower(F.col("text")))
-    if _scan_bytes(d) <= _KGRAM_HOF_MAX_BYTES:
-        n = F.size(t)
-        pair_cnt = F.greatest(n - 1, F.lit(0))
-        doc = d.select(
-            "doc_id",
-            "source",
-            F.arrays_zip(
-                F.slice(t, 1, pair_cnt), F.slice(t, 2, pair_cnt)
-            ).alias("bgs"),
-        )
-        occ_src = doc.select(
-            "doc_id",
-            "source",
-            F.explode("bgs").alias("bg"),
-        ).select(
-            "doc_id",
-            "source",
-            F.col("bg.0").alias("prev"),
-            F.col("bg.1").alias("w"),
-        )
-        # small arm: default (in-memory) checkpoint blocks
-        occ = occ_src.localCheckpoint()
-    else:
-        from ..catalog import sized_for_expansion
-        from ..functions.text import ngram_cols_stream
-
-        # expansion-aware partitioning — same rationale as the trigram
-        # twin (catalog.sized_for_expansion)
-        occ_src = ngram_cols_stream(
-            sized_for_expansion(d.select("doc_id", "source", "text"), 16.0),
-            "text",
-            2,
-            ["doc_id", "source"],
-            ["prev", "w"],
-        )
-        # parquet scratch above _LM_DISK_CKPT_MIN_BYTES — same
-        # rationale as the trigram twin (_lm_occ_scratch)
-        if _scan_bytes(d) > _LM_DISK_CKPT_MIN_BYTES:
-            occ = _lm_occ_scratch(spark, occ_src, "bi")
-        else:
-            occ = occ_src.localCheckpoint()
-    # occ feeds bigram counts AND per-doc scoring.
-    # Vocab (unigram counts): in the large arm the occ stream is
-    # Python-tokenized (ngram_cols_stream's str.lower) while tokens()
-    # lowers in the JVM — a locale/Unicode-version divergence there
-    # would silently drop bigrams from the lp2 inner join (round-13
-    # ADVICE fix), so the large arm derives the vocab from a 1-gram
-    # pass of the SAME tokenizer (multiset-identical on the fixtures,
-    # pinned by the forced-arm differential test). Below the scratch
-    # threshold the JVM explode stays: it is codegen and measured
-    # 0.18 vs 0.36 s at sf0.1 — the Arrow pass only wins at corpus
-    # scale, exactly where the large arm lives.
+    occ, bigc, _ = _lm_occurrences(spark, d, ["prev", "w"], "nb")
+    # Vocab (unigram counts over every token). In the scratch arm it
+    # comes from a 1-gram pass of ngram_stream, the tokenizer of the
+    # occurrence stream there, so a JVM-vs-Python lowercasing
+    # divergence cannot silently drop bigrams from the lp2 inner join.
+    # Below the scratch bound the JVM explode stays: an Arrow vocab
+    # measured 2.57 vs 2.22 s at sf0.1 (lost 8 of 8 pairs).
     if _scan_bytes(d) > _LM_DISK_CKPT_MIN_BYTES:
-        from ..functions.text import ngram_cols_stream as _ncs
-
-        tok = _ncs(d.select("text"), "text", 1, [], ["token"])
+        tok = ngram_stream(d, "text", 1, [], names=["token"])
     else:
-        tok = d.select(F.explode(t).alias("token"))
+        tok = d.select(F.explode(tokens(F.lower(F.col("text")))).alias("token"))
     vocab = (
         tok.groupBy("token").agg(F.count("*").alias("n")).localCheckpoint()
     )
     tot = vocab.agg(F.sum("n").cast("double").alias("t"))
-    bigc = occ.groupBy("prev", "w").agg(F.count("*").alias("nb"))
     lp2 = (
         bigc.join(vocab.selectExpr("token AS prev", "n AS np"), "prev")
         .join(vocab.selectExpr("token AS w", "n AS nw"), "w")
@@ -1727,111 +1674,27 @@ def text_trigram_backoff_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: trigrams come from zipped slices (no positional
     self-join); the expensive tokenize+zip+explode is checkpointed
     once and feeds all five count aggregations AND the per-doc
-    scoring join. Round 12: above the shared ``_KGRAM_HOF_MAX_BYTES``
-    scan threshold the occurrence stream is produced by the Arrow
-    ``ngram_cols_stream`` pass instead of the interpreted
-    zip-slice-explode (noop-isolated at 24.3 s of the 102.9 s 100x
-    probe run) — bit-equality pinned by
-    test_ngram_cols_stream_matches_spec; the checkpoint and every
-    consumer are unchanged. The LM tables carry NO broadcast hints
-    (round 8):
-    they are vocab-sized — they grow with the corpus — and Spark
-    honors hints unconditionally, so the hinted form forced a 2 GB+
-    broadcast at the 100x probe (caught by /tmp/sf10, BASELINE.md).
+    scoring join (_lm_occurrences; its ngram_stream picks the
+    expression or Arrow arm by scan size). The LM tables carry NO
+    broadcast hints: they are vocab-sized — they grow with the corpus
+    — and Spark honors hints unconditionally, so the hinted form
+    forced a 2 GB+ broadcast at the 100x probe (BASELINE.md).
     AQE picks broadcast while a table is actually small and a
     hash-partitioned equi-join on the n-gram key beyond — the same
-    fuzzy-ER precedent as round 7."""
+    fuzzy-ER precedent."""
     from pyspark.sql.functions import broadcast
 
     d = load_table(spark, sf_dir, "documents")
-    if _scan_bytes(d) <= _KGRAM_HOF_MAX_BYTES:
-        t = tokens(F.lower(F.col("text")))
-        n = F.size(t)
-        tc = F.greatest(n - 2, F.lit(0))
-        doc = d.select(
-            "doc_id",
-            "source",
-            F.arrays_zip(
-                F.slice(t, 1, tc), F.slice(t, 2, tc), F.slice(t, 3, tc)
-            ).alias("tgs"),
-        )
-        occ_src = doc.select(
-            "doc_id", "source", F.explode("tgs").alias("tg")
-        ).select(
-            "doc_id",
-            "source",
-            F.col("tg.0").alias("u"),
-            F.col("tg.1").alias("v"),
-            F.col("tg.2").alias("w"),
-        )
-        # small arm: default (in-memory) checkpoint blocks — the
-        # stream fits comfortably next to the aggregations
-        occ = occ_src.localCheckpoint()
-    else:
-        from ..catalog import sized_for_expansion
-        from ..functions.text import ngram_cols_stream
-
-        # expansion-aware partitioning (~16x parquet bytes -> occurrence
-        # rows): rationale at catalog.sized_for_expansion — a
-        # defaultParallelism-sized layout OOMs the downstream count
-        # aggs' map stage at the 1000x probe
-        occ_src = ngram_cols_stream(
-            sized_for_expansion(d.select("doc_id", "source", "text"), 16.0),
-            "text",
-            3,
-            ["doc_id", "source"],
-            ["u", "v", "w"],
-        )
-        # parquet scratch above _LM_DISK_CKPT_MIN_BYTES (rationale at
-        # _lm_occ_scratch: every localCheckpoint storage level OOMs
-        # the 1000x probe on per-row block ser/deser churn); plain
-        # in-memory checkpoint blocks below, where the stream fits
-        # next to the aggregations.
-        if _scan_bytes(d) > _LM_DISK_CKPT_MIN_BYTES:
-            occ = _lm_occ_scratch(spark, occ_src, "tri")
-        else:
-            occ = occ_src.localCheckpoint()
-    # occ feeds the count tables AND per-doc scoring
-    tri = occ.groupBy("u", "v", "w").agg(F.count("*").alias("c3"))
-    if _scan_bytes(d) > _LM_DISK_CKPT_MIN_BYTES:
-        # Above the disk-checkpoint threshold, derive every lower-order
-        # table from tri instead of re-aggregating occ: cpre(u,v) =
-        # SUM over w of c3, csuf/cmid/clast/tt likewise — exact int64
-        # partial sums, value-identical by construction. At bench/sf10
-        # scale this shape MEASURED SLOWER (63.4 -> 79.2 s at the 100x
-        # probe: near-occurrence-sized tri vocab means the extra
-        # exchange collapses nothing — see "Tried and rejected",
-        # OPTIMIZATION_r12.md), so it stays out of the small arm; at
-        # the 1000x probe it is the difference between completing and
-        # OOM — the five-agg form reads the ~100 GB DISK_ONLY occ
-        # checkpoint SEVEN times, up to five agg stages concurrently,
-        # and the raw-heap deserialization churn kills a 48 g heap
-        # (java.lang.OutOfMemoryError, GCLocker thrash — measured
-        # r12). Here occ is read twice (tri + scoring join) and the
-        # lower orders ride the narrower checkpointed tri.
-        # tri is ALSO parquet scratch here: on the word-perturbed probe
-        # corpus the trigram vocabulary is nearly occurrence-sized, so
-        # an RDD-block checkpoint of it re-imports the same per-row
-        # deserialization churn the occ scratch just removed
-        # (UnsafeRow.readExternal OOM at stage 49, measured r12).
-        tri = _lm_occ_scratch(spark, tri, "tri_counts")
-        pre = tri.groupBy("u", "v").agg(F.sum("c3").alias("cpre"))
-        suf = tri.groupBy("v", "w").agg(F.sum("c3").alias("csuf"))
-        mid = tri.groupBy("v").agg(F.sum("c3").alias("cmid"))
-        lastc = tri.groupBy("w").agg(F.sum("c3").alias("clast"))
-        # coalesce: SUM over an empty tri is NULL while the small arm's
-        # COUNT is 0 — output-identical today only because lp is empty
-        # whenever tri is (round-13 ADVICE fix makes the arms
-        # explicitly equivalent)
-        tot = tri.agg(
-            F.coalesce(F.sum("c3").cast("double"), F.lit(0.0)).alias("tt")
-        )
-    else:
-        pre = occ.groupBy("u", "v").agg(F.count("*").alias("cpre"))
-        suf = occ.groupBy("v", "w").agg(F.count("*").alias("csuf"))
-        mid = occ.groupBy("v").agg(F.count("*").alias("cmid"))
-        lastc = occ.groupBy("w").agg(F.count("*").alias("clast"))
-        tot = occ.agg(F.count(F.lit(1)).cast("double").alias("tt"))
+    occ, tri, low = _lm_occurrences(
+        spark,
+        d,
+        ["u", "v", "w"],
+        "c3",
+        {"cpre": ["u", "v"], "csuf": ["v", "w"], "cmid": ["v"], "clast": ["w"],
+         "tt": []},
+    )
+    pre, suf, mid, lastc = low["cpre"], low["csuf"], low["cmid"], low["clast"]
+    tot = low["tt"].select(F.col("tt").cast("double").alias("tt"))
     s = (
         F.when(
             F.col("c3") >= 2, F.col("c3").cast("double") / F.col("cpre")
@@ -1876,53 +1739,74 @@ def text_trigram_backoff_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Below this many scan bytes of documents parquet the JVM HOF shingle
-# expression wins text_kgram_novelty (no Python worker round-trip; its
-# interpreted per-gram cost is noise on a sub-100KB corpus). Above it
-# the Arrow shingle_stream pass takes over — at the 100x probe (64 MB
-# of documents parquet) the HOF's interpreted concat is ~18s per
-# consumer vs ~10s total for the Arrow pass. The threshold was 8 MB
-# when the dispatch landed; re-measured after the per-task token memo
-# (commit beaeacc's pass now reuses tokenized docs across both
-# consumers' batches), the Arrow arm wins already at the 594 KB sf0.1
-# corpus (interleaved same-JVM A/B: 1.26s vs 1.60s min for the HOF
-# arm), so the crossover sits below sf0.1: keep the HOF fast path only
-# for sub-256KB corpora (check.py's sf0.001/sf0.01 differentials),
-# where Python worker spin-up still dominates.
-# Env-overridable (round 13) so the Arrow arm is forceable at any SF
-# for standalone differential runs (the in-CI force is a monkeypatch).
-_KGRAM_HOF_MAX_BYTES = int(
-    os.environ.get("SPARK_GRAFT_KGRAM_HOF_MAX_BYTES", str(256 * 1024))
-)
-
 # Above this many scan bytes of documents parquet, the LM queries
 # switch to their scale arm: occurrence/count intermediates go to
 # parquet scratch instead of checkpoint blocks, and the trigram
 # lower-order tables derive from tri. The occurrence stream is ~150x
 # the compressed scan bytes in row form (text parquet compresses
 # ~10x; each token position becomes a row), so EVERY RDD-block
-# residency for it dies at the 1000x probe (665 MB scan, 48 g heap —
-# measured r12 in sequence: MEMORY_AND_DISK starved the agg pool
-# [AGGREGATE_OUT_OF_MEMORY], DISK_ONLY then OOM'd raw heap on
-# per-row Java deserialization churn, Kryo likewise on per-row
-# object construction) while parquet scratch reads back vectorized
-# and column-pruned with zero per-row objects. The boundary sits
-# between the two measured points: the 100x probe (67 MB scan,
-# ~2.6 GB expanded) completes on the 8 g default heap with plain
-# in-memory checkpoint blocks and is FASTER that way (no write
-# barrier); 1000x (665 MB, ~100 GB expanded) needs the scratch arm
-# at any heap this box can offer. sf0.1 (594 KB) keeps in-memory
-# blocks and measured +0.4 s under the disk arm — the small-SF cost
-# the threshold avoids.
-#
-# Env-overridable (round-13 verdict item #2) so the scale arm is
-# REACHABLE by CI: the forced-arm differential test pins the large
-# arm's output hash-equal to the small arm + the DuckDB oracle at
-# small SF; tools/check.py can do the same standalone
-# (SPARK_GRAFT_LM_DISK_MIN_BYTES=0 python tools/check.py ...).
-_LM_DISK_CKPT_MIN_BYTES = int(
-    os.environ.get("SPARK_GRAFT_LM_DISK_MIN_BYTES", str(128 << 20))
-)
+# residency for it dies at the 1000x probe (665 MB scan, 48 g heap:
+# MEMORY_AND_DISK starved the agg pool [AGGREGATE_OUT_OF_MEMORY],
+# DISK_ONLY then OOM'd raw heap on per-row Java deserialization
+# churn, Kryo likewise on per-row object construction) while parquet
+# scratch reads back vectorized and column-pruned with zero per-row
+# objects. The boundary sits between the two measured points: the
+# 100x probe (67 MB scan, ~2.6 GB expanded) completes on the 8 g
+# default heap with plain in-memory checkpoint blocks and is FASTER
+# that way (no write barrier); 1000x (665 MB, ~100 GB expanded) needs
+# the scratch arm at any heap this box can offer. sf0.1 (594 KB)
+# keeps in-memory blocks and measured +0.4 s under the disk arm.
+_LM_DISK_CKPT_MIN_BYTES = 128 << 20
+
+
+def _lm_occurrences(spark, d, names, count_col, lower=None):
+    """The LM queries' n-gram occurrence stream over documents ``d``
+    and its count tables. Returns ``(occ, counts, lower_counts)``:
+
+    * ``occ`` — the materialized ngram_stream ``(doc_id, source,
+      *names)``, one row per n-gram occurrence; it feeds the count
+      tables AND the per-doc scoring join;
+    * ``counts`` — occurrences per distinct n-gram, ``(*names,
+      count_col)``;
+    * ``lower_counts`` — for each ``alias: cols`` of ``lower``, the
+      occurrences per distinct ``cols`` (a subset of ``names``) as
+      ``(*cols, alias)``; ``[]`` gives the one-row total.
+
+    At or below ``_LM_DISK_CKPT_MIN_BYTES`` of scan input ``occ`` is a
+    localCheckpoint and every table counts it. Above, ``occ`` is
+    parquet scratch (:func:`_lm_occ_scratch`), and when lower orders
+    are asked for ``counts`` is parquet scratch too and each lower
+    order sums it — exact int64 partial sums, value-identical by
+    construction. At the 1000x probe that is the difference between
+    completing and OOM: counting every order from occ reads the
+    ~100 GB stream seven times, up to five agg stages concurrently,
+    and the raw-heap deserialization churn killed a 48 g heap
+    (GCLocker thrash). Here occ is read twice (counts + scoring
+    join); counts is scratch because on the word-perturbed probe
+    corpus the trigram vocabulary is nearly occurrence-sized, so an
+    RDD-block checkpoint of it re-imports the per-row churn
+    (UnsafeRow.readExternal OOM).
+    Below the bound the derived shape MEASURED SLOWER (63.4 -> 79.2 s
+    at the 100x probe: a near-occurrence-sized tri vocab means the
+    extra exchange collapses nothing, OPTIMIZATION_r12.md)."""
+    lower = lower or {}
+    src = ngram_stream(d, "text", len(names), ["doc_id", "source"], names=names)
+    scale = _scan_bytes(d) > _LM_DISK_CKPT_MIN_BYTES
+    occ = _lm_occ_scratch(spark, src, "occ") if scale else src.localCheckpoint()
+    counts = occ.groupBy(*names).agg(F.count("*").alias(count_col))
+    if not (scale and lower):
+        return occ, counts, {
+            alias: occ.groupBy(*cols).agg(F.count("*").alias(alias))
+            for alias, cols in lower.items()
+        }
+    counts = _lm_occ_scratch(spark, counts, "counts")
+    # coalesce: SUM over an empty table is NULL where COUNT is 0
+    return occ, counts, {
+        alias: counts.groupBy(*cols).agg(
+            F.coalesce(F.sum(count_col), F.lit(0)).alias(alias)
+        )
+        for alias, cols in lower.items()
+    }
 
 
 def _lm_occ_scratch(spark, occ_src, name: str):
@@ -2048,35 +1932,18 @@ def text_kgram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     combined count row, not a million-row sort group). Per-doc and
     per-source aggs are map-combinable integer counts — exact.
 
-    Round-12 (verdict #8): the gram stream is size-dispatched. Above
-    ``_KGRAM_HOF_MAX_BYTES`` of scan input it is produced by the Arrow
-    ``shingle_stream`` pass — the HOF transform's interpreted per-gram
-    concat was ~18s x 2 consumers of the 30s sf10 runtime and the
-    superlinear tail of the 472s sf100 probe, while the Arrow pass is
-    ~10s and partition-parallel. Below the threshold the original
-    ``explode(array_distinct(shingles))`` expression wins (no Python
-    worker round-trip; at sf0.1 the HOF cost is noise and the Arrow
-    constants are not). A DISK_ONLY persist of the stream was tried
-    and rejected: the columnar cache build stacks on the same stage as
-    the dup partial agg and 32 Arrow workers, and the combination
-    OOMs the 8g probe heap at sf100. The two producers are
-    bit-equality-gated
-    (test_operators_golden.py::test_shingle_stream_matches_hof_spec),
-    so the dispatch can change only the plan, never a value — oracle
-    unchanged."""
-    from ..functions.text import shingle_stream, shingles
-
+    The gram stream is :func:`ngram_stream` (expression arm on small
+    corpora, Arrow pass at scale — the HOF transform's interpreted
+    per-gram concat was ~18s x 2 consumers of the 30s sf10 runtime and
+    the superlinear tail of the 472s sf100 probe, while the Arrow pass
+    is ~10s and partition-parallel). A DISK_ONLY persist of the stream
+    was tried and rejected: the columnar cache build stacks on the
+    same stage as the dup partial agg and 32 Arrow workers, and the
+    combination OOMs the 8g probe heap at sf100."""
     d = load_table(spark, sf_dir, "documents")
-    if _scan_bytes(d) <= _KGRAM_HOF_MAX_BYTES:
-        low = F.lower(F.trim(F.col("text")))
-        grams = d.select(
-            "doc_id",
-            "source",
-            "lang",
-            F.explode(F.array_distinct(shingles(low, 5))).alias("g"),
-        )
-    else:
-        grams = shingle_stream(d, "text", 5, ["doc_id", "source", "lang"])
+    grams = ngram_stream(
+        d, "text", 5, ["doc_id", "source", "lang"], distinct=True
+    )
     dup = (
         grams.groupBy("g")
         .agg(F.count("*").alias("ndocs"))

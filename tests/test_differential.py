@@ -105,17 +105,24 @@ def test_event_where_hook_matches_oracle(spark, ddb, label, pred):
     assert got == want
 
 
-# Round-13 (verdict item #2): the LM scale arms — Arrow occurrence
-# front end + sized_for_expansion layout, parquet scratch instead of
-# checkpoint blocks, and the trigram lower-orders-derived-from-tri
-# rewrite — are gated behind a 128 MB scan threshold no committed SF
-# reaches, so CI executed zero lines of them when they landed (r12
-# commit 1e5cc55). These tests FORCE each arm at sf0.01 via the
-# module-level thresholds and pin the output rows exactly equal to the
-# small arm's (which the DuckDB oracle checks above), so the arms are
-# now differentially reachable. SPARK_GRAFT_LM_DISK_MIN_BYTES gives
-# the same override standalone (tools/check.py).
+# Forced-arm gates. ngram_stream picks its expression arm on every
+# committed test SF below sf0.1, and the LM queries' parquet-scratch
+# arm sits behind a 128 MB scan bound no committed SF reaches. These
+# tests FORCE each arm at sf0.01 through the module constants and pin
+# the output rows exactly equal to the default arm's (which the
+# DuckDB oracle checks above): the Arrow arm for every ngram_stream
+# caller, and for the two LM queries also the scale arm (Arrow
+# occurrence stream + parquet scratch + the trigram's lower-order
+# tables derived from the tri counts).
 _LM_QUERIES = ["text_bigram_interp_logprob", "text_trigram_backoff_logprob"]
+_NGRAM_QUERIES = _LM_QUERIES + [
+    "text_kgram_novelty",
+    "dedup_substring_coverage",
+    "text_gopher_filters",
+    "pipe_contamination_overlap",
+    "pipe_curation_funnel",
+    "pipe_decontam_bloom",
+]
 
 
 def _lm_rows(spark, name, sf):
@@ -126,25 +133,28 @@ def _lm_rows(spark, name, sf):
     )
 
 
-@pytest.mark.parametrize("name", _LM_QUERIES)
+@pytest.mark.parametrize("name", _NGRAM_QUERIES)
 def test_lm_scale_arm_matches_small_arm(spark, name, monkeypatch):
     from conftest import SF_CORRECT
 
+    from appeals_data_spark.functions import text
     from appeals_data_spark.queries import textops_q
 
     small = _lm_rows(spark, name, SF_CORRECT)
 
-    # mid arm: Arrow ngram_cols_stream front end, in-memory checkpoint
-    monkeypatch.setattr(textops_q, "_KGRAM_HOF_MAX_BYTES", -1)
-    mid = _lm_rows(spark, name, SF_CORRECT)
-    assert mid == small
+    # Arrow ngram_stream arm
+    monkeypatch.setattr(text, "NGRAM_ARROW_MIN_BYTES", -1)
+    arrow = _lm_rows(spark, name, SF_CORRECT)
+    assert arrow == small and len(small) > 0
+    if name not in _LM_QUERIES:
+        return
 
-    # large arm: + parquet scratch and (trigram) lower-order tables
-    # derived from the checkpointed tri counts
+    # LM scale arm: + parquet scratch and (trigram) lower-order tables
+    # derived from the scratch tri counts
     n_scratch_before = len(textops_q._LM_SCRATCH_PATHS)
     monkeypatch.setattr(textops_q, "_LM_DISK_CKPT_MIN_BYTES", -1)
     large = _lm_rows(spark, name, SF_CORRECT)
     assert large == small
     # the arm actually executed: at least one parquet scratch was built
-    # (two for trigram: occ + tri_counts)
+    # (two for trigram: occ + tri counts)
     assert len(textops_q._LM_SCRATCH_PATHS) > n_scratch_before

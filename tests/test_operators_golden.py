@@ -865,19 +865,51 @@ def test_nearest_centroid_fold_tiebreak(spark):
     assert best["c_label"] == 1
 
 
-def test_shingle_stream_matches_hof_spec(spark):
-    """functions.text.shingle_stream's Arrow producer must emit the
-    EXACT row multiset of the HOF spec it replaces —
-    explode(array_distinct(shingles(lower(trim(text)), k))) — on real
-    testdata AND on edge-case rows exercising the JVM semantics the
-    Python port mirrors by hand: ASCII-space-only trim, tab/newline
-    separators that trim does NOT strip, repeated grams (distinct
-    keeps first occurrence), docs shorter than k, empty and NULL
-    text."""
-    import pyspark.sql.functions as F
+# (k, names, distinct, count_col, carry): every shape a caller uses —
+# joined distinct grams with and without a per-doc count and carry
+# columns (kgram, gopher, decontam), joined occurrences (substring
+# coverage), token columns (LM occurrence streams, 1-gram vocab) —
+# plus the combinations no caller uses yet.
+_NGRAM_CASES = [
+    (1, None, False, None, ["doc_id"]),
+    (1, ["token"], False, None, []),
+    (2, None, True, None, ["doc_id", "source"]),
+    (2, ["prev", "w"], False, None, ["doc_id"]),
+    (2, ["a", "b"], True, "n", ["doc_id"]),
+    (3, None, True, "n_grams", ["doc_id"]),
+    (3, None, True, None, []),
+    (3, None, False, None, ["doc_id"]),
+    (3, ["u", "v", "w"], False, None, ["doc_id", "source"]),
+    (5, None, True, None, ["doc_id", "source"]),
+    (5, None, False, None, ["doc_id", "source"]),
+]
 
+
+@pytest.mark.parametrize(
+    "k,names,distinct,count_col,carry",
+    _NGRAM_CASES,
+    ids=[
+        f"k{c[0]}-{'cols' if c[1] else 'g'}-{'dist' if c[2] else 'occ'}"
+        f"{'-count' if c[3] else ''}-carry{len(c[4])}"
+        for c in _NGRAM_CASES
+    ],
+)
+def test_ngram_stream_arrow_arm_matches_expression_arm(
+    spark, k, names, distinct, count_col, carry
+):
+    """functions.text.ngram_stream's Arrow arm must emit the EXACT row
+    multiset of its expression arm — explode of the zip-slice array
+    over tokens(lower(text)) — on real testdata AND on edge rows
+    exercising the JVM semantics the Python tokenizer mirrors by
+    hand: ASCII-space-only trim, tab/newline/\\x0b/\\f/\\r separators,
+    repeated grams (distinct keeps first occurrence, occurrences keep
+    repeats), docs shorter than k, empty, whitespace-only and NULL
+    text, and non-ASCII case."""
     from appeals_data_spark.catalog import load_table
-    from appeals_data_spark.functions.text import shingle_stream, shingles
+    from appeals_data_spark.functions.text import (
+        _ngram_arrow,
+        _ngram_expression,
+    )
 
     from conftest import SF_CORRECT
 
@@ -888,134 +920,71 @@ def test_shingle_stream_matches_hof_spec(spark):
             out[key] = out.get(key, 0) + 1
         return out
 
-    for k in (2, 5):
-        d = load_table(spark, SF_CORRECT, "documents")
-        got = multiset(shingle_stream(d, "text", k, ["doc_id", "source"]))
-        low = F.lower(F.trim(F.col("text")))
-        want = multiset(
-            d.select(
-                "doc_id",
-                "source",
-                F.explode(F.array_distinct(shingles(low, k))).alias("g"),
-            )
-        )
-        assert got == want and len(got) > 0, k
+    def both(d):
+        args = (d, "text", k, carry, names, distinct, count_col)
+        return multiset(_ngram_arrow(*args)), multiset(_ngram_expression(*args))
 
-    edge = spark.createDataFrame(
-        [
-            (1, "  A b\tc  B\n\nd a b  "),   # mixed seps, leading/trailing
-            (2, "x y x y x y"),              # repeated grams
-            (3, "one two"),                  # shorter than k=3
-            (4, ""),                         # empty
-            (5, None),                       # null
-            (6, "\tlead tab stays then more words here"),  # trim is space-only
-        ],
-        "doc_id long, text string",
-    )
-    got = multiset(shingle_stream(edge, "text", 3, ["doc_id"]))
-    low = F.lower(F.trim(F.col("text")))
-    want = multiset(
-        edge.select(
-            "doc_id",
-            F.explode(F.array_distinct(shingles(low, 3))).alias("g"),
-        )
-    )
+    docs = load_table(spark, SF_CORRECT, "documents")
+    got, want = both(docs)
     assert got == want and len(got) > 0
 
-    # count_col (the decontam carry): every emitted row additionally
-    # carries size(array_distinct(shingles(...))) of its doc — the
-    # exact per-doc total the expression spec derives via size(gs).
-    got_n = multiset(
-        shingle_stream(edge, "text", 3, ["doc_id"], count_col="n_grams")
+    edge = spark.createDataFrame(
+        [
+            (1, "s1", "  A b\tc  B\n\nd a b  "),  # mixed seps, mixed case
+            (2, "s1", "x y x y x y"),              # repeated grams
+            (3, "s2", "one two"),                  # shorter than k=3
+            (4, "s2", "solo"),                     # shorter than k=2
+            (5, "s2", ""),                         # empty
+            (6, "s3", None),                       # null
+            (7, "s3", " \t\n\x0b\f\r "),            # whitespace only
+            (8, "s3", "\tlead tab stays then more words here"),
+            (9, "s4", "\x0bvert\ftab\rforms split too"),  # full ASCII \s
+            (10, "s4", "Ärger ÉCOLE Straße ÇA ça über Ärger École"),
+        ],
+        "doc_id long, source string, text string",
     )
-    gs = F.array_distinct(shingles(low, 3))
-    want_n = multiset(
-        edge.select(
-            "doc_id",
-            F.size(gs).alias("n_grams"),
-            F.explode(gs).alias("g"),
+    got, want = both(edge)
+    assert got == want and len(got) > 0
+    if names == ["prev", "w"]:
+        # occurrence semantics really pinned: doc 2 repeats its bigrams
+        assert got[(2, "x", "y")] == 3 and got[(2, "y", "x")] == 2
+    if k == 3 and names is None and carry == ["doc_id"]:
+        # distinct keeps one row per gram, occurrences keep repeats
+        assert got[(2, "x y x") if not count_col else (2, 2, "x y x")] == (
+            1 if distinct else 2
         )
-    )
-    assert got_n == want_n and len(got_n) > 0
-
-    # empty carry (the bench-branch shape): gram-only stream
-    got_e = multiset(shingle_stream(edge, "text", 3, []))
-    want_e = multiset(
-        edge.select(F.explode(F.array_distinct(shingles(low, 3))).alias("g"))
-    )
-    assert got_e == want_e and len(got_e) > 0
-
-    # distinct=False (the substring-coverage shape): the occurrence
-    # multiset, repeats preserved
-    got_o = multiset(
-        shingle_stream(edge, "text", 3, ["doc_id"], distinct=False)
-    )
-    want_o = multiset(
-        edge.select("doc_id", F.explode(shingles(low, 3)).alias("g"))
-    )
-    assert got_o == want_o and len(got_o) > 0
-    assert sum(got_o.values()) > sum(got.values())  # repeats really kept
 
 
-def test_ngram_cols_stream_matches_spec(spark):
-    """functions.text.ngram_cols_stream (the LM-query occurrence
-    front end) must emit the EXACT row multiset of the expression
-    spec it replaces — explode(arrays_zip(slice(t,1,c), ..,
-    slice(t,k,c))) over t = tokens(lower(text)) — on real testdata
-    AND on edge rows exercising the tokenizer semantics (ASCII \\s
-    separators, docs shorter than k, empty/NULL text, repeated
-    grams kept: this stream is an OCCURRENCE multiset)."""
-    import pyspark.sql.functions as F
-
+def test_ngram_stream_dispatch(spark, monkeypatch):
+    """ngram_stream runs the expression arm at or below
+    NGRAM_ARROW_MIN_BYTES of scan input and the Arrow pass above it or
+    when the size is unknown (a frame with no file scan)."""
     from appeals_data_spark.catalog import load_table
-    from appeals_data_spark.functions.text import ngram_cols_stream, tokens
+    from appeals_data_spark.functions import text
 
     from conftest import SF_CORRECT
 
-    def multiset(df):
-        out = {}
-        for r in df.collect():
-            key = tuple(r)
-            out[key] = out.get(key, 0) + 1
-        return out
+    def arm(df):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return "arrow" if "MapInPandas" in plan else "expression"
 
-    def spec(d, k, names):
-        t = tokens(F.lower(F.col("text")))
-        cnt = F.greatest(F.size(t) - (k - 1), F.lit(0))
-        z = F.arrays_zip(*[F.slice(t, j + 1, cnt) for j in range(k)])
-        return d.select("doc_id", F.explode(z).alias("g")).select(
-            "doc_id", *[F.col(f"g.{j}").alias(names[j]) for j in range(k)]
-        )
-
-    for k, names in ((2, ["prev", "w"]), (3, ["u", "v", "w"])):
-        d = load_table(spark, SF_CORRECT, "documents")
-        got = multiset(ngram_cols_stream(d, "text", k, ["doc_id"], names))
-        want = multiset(spec(d, k, names))
-        assert got == want and len(got) > 0, k
-
-    edge = spark.createDataFrame(
-        [
-            (1, "  A b\tc  B\n\nd a b  "),  # mixed seps, mixed case
-            (2, "x y x y x y"),             # repeated grams (occurrences!)
-            (3, "one two"),                 # shorter than k=3
-            (4, "solo"),                    # shorter than k=2
-            (5, ""),                        # empty
-            (6, None),                      # null
-            (7, "\x0bvert\ftab\rforms split too"),  # full ASCII \s class
-        ],
-        "doc_id long, text string",
+    docs = load_table(spark, SF_CORRECT, "documents")
+    assert arm(text.ngram_stream(docs, "text", 3, ["doc_id"])) == "expression"
+    # the gram HOF is planned in ONE operator, below the explode: not
+    # again above it per emitted row (the per-doc count), nor in an
+    # inferred size(...) > 0 filter
+    counted = text.ngram_stream(
+        docs, "text", 3, ["doc_id"], distinct=True, count_col="n"
     )
-    for k, names in ((2, ["prev", "w"]), (3, ["u", "v", "w"])):
-        got = multiset(ngram_cols_stream(edge, "text", k, ["doc_id"], names))
-        want = multiset(spec(edge, k, names))
-        assert got == want and len(got) > 0, k
-    # occurrence semantics really pinned: doc 2 has repeated bigrams
-    got2 = multiset(
-        ngram_cols_stream(
-            edge.filter("doc_id = 2"), "text", 2, ["doc_id"], ["prev", "w"]
-        )
-    )
-    assert got2[(2, "x", "y")] == 3 and got2[(2, "y", "x")] == 2
+    plan = counted._jdf.queryExecution().executedPlan().toString()
+    hof_ops = [ln for ln in plan.splitlines() if "lambdafunction" in ln]
+    assert len(hof_ops) == 1, plan
+    # children print after their parent: the HOF sits below the explode
+    assert plan.index(hof_ops[0]) > plan.index("Generate"), plan
+    mem = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
+    assert arm(text.ngram_stream(mem, "text", 3, ["doc_id"])) == "arrow"
+    monkeypatch.setattr(text, "NGRAM_ARROW_MIN_BYTES", -1)
+    assert arm(text.ngram_stream(docs, "text", 3, ["doc_id"])) == "arrow"
 
 
 def test_para_feature_rows_match_expression_spec(spark):

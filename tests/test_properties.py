@@ -594,16 +594,13 @@ def test_bt_pair_stats_dispatch(spark):
     result (the equality gate above), so this pins the routing rule
     itself: test-SF parquet is far below BT_EXPLODED_MAX_BYTES, and a
     non-scan frame (no inputFiles) must fall to the chunked path."""
-    from appeals_data_spark.catalog import load_table
-    from appeals_data_spark.queries.survival_q import (
-        BT_EXPLODED_MAX_BYTES,
-        _input_bytes,
-    )
+    from appeals_data_spark.catalog import load_table, scan_input_bytes
+    from appeals_data_spark.queries.survival_q import BT_EXPLODED_MAX_BYTES
 
     from conftest import SF_CORRECT
 
     li = load_table(spark, SF_CORRECT, "lineitem")
-    nbytes = _input_bytes(li)
+    nbytes = scan_input_bytes(li)
     assert nbytes is not None and 0 < nbytes <= BT_EXPLODED_MAX_BYTES
     # a derived frame with no file scan reports unknown -> LARGE
     synthetic = spark.range(10).selectExpr(
@@ -611,7 +608,7 @@ def test_bt_pair_stats_dispatch(spark):
         "CAST(1 AS double) AS l_extendedprice",
         "CAST(1 AS double) AS l_quantity",
     )
-    assert _input_bytes(synthetic) is None
+    assert scan_input_bytes(synthetic) is None
 
 
 def test_bt_sharded_fit_bit_identical_beyond_arrow_bound(spark):

@@ -25,21 +25,15 @@ def test_every_round_site_is_classified():
 
 
 def test_rounding_md_is_current():
-    with open(os.path.join(ROOT, "ROUNDING.md")) as f:
-        before = f.read()
-    subprocess.run(
+    # --check compares in memory and writes nothing, so a stale
+    # ROUNDING.md keeps failing until the regenerated file is committed
+    proc = subprocess.run(
         [
             sys.executable,
             os.path.join(ROOT, "tools", "audit_rounding.py"),
-            "--write",
+            "--check",
         ],
         capture_output=True,
         text=True,
-        check=True,
     )
-    with open(os.path.join(ROOT, "ROUNDING.md")) as f:
-        after = f.read()
-    assert before == after, (
-        "ROUNDING.md is stale — run `python tools/audit_rounding.py "
-        "--write` and commit the result"
-    )
+    assert proc.returncode == 0, proc.stdout + proc.stderr

@@ -13,8 +13,11 @@ This script inventories every remaining ROUND site in the engine and
 classifies it into an annotated tie-risk category; a site no rule or
 override covers FAILS the audit, so a new un-reviewed ROUND cannot
 ship (tests/test_rounding_audit.py runs this in CI). Output:
-ROUNDING.md — file:line, snippet, category, reason — regenerated on
-each run with --write.
+ROUNDING.md — one row per (file, enclosing function, ROUND
+expression) key with its site count and category; keyed without line
+numbers, so an edit elsewhere in a file leaves its rows alone. It is
+rewritten by ``--write``; ``--check`` compares it in memory, writes
+nothing, and fails when it is stale.
 
 Categories (reasons in CATEGORY_REASONS):
 
@@ -53,9 +56,11 @@ BANNED outright (category ratio-int fails the audit — use ratio_dbl).
 
 from __future__ import annotations
 
+import ast
 import os
 import re
 import sys
+from collections import Counter
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = os.path.join(ROOT, "appeals_data_spark")
@@ -203,7 +208,54 @@ OVERRIDES: dict[str, list[tuple[str, str, str]]] = {
 }
 
 
+def _enclosing_functions(source: str) -> list[tuple[int, int, str]]:
+    """(first line, last line, dotted name) of every function; a
+    function's span starts at its first decorator, so a registered
+    query's oracle SQL belongs to that query."""
+    spans = []
+
+    def walk(node, prefix):
+        for child in ast.iter_child_nodes(node):
+            name = prefix
+            if isinstance(
+                child, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+            ):
+                name = f"{prefix}.{child.name}" if prefix else child.name
+                start = min(
+                    [child.lineno] + [d.lineno for d in child.decorator_list]
+                )
+                if not isinstance(child, ast.ClassDef):
+                    spans.append((start, child.end_lineno, name))
+            walk(child, name)
+
+    walk(ast.parse(source), "")
+    return spans
+
+
+def _enclosing(spans, line: int) -> str:
+    inside = [s for s in spans if s[0] <= line <= s[1]]
+    return max(inside)[2] if inside else "<module>"
+
+
+def _expression(lines: list[str], i0: int) -> str:
+    """The ROUND call starting on line ``i0``, through its balanced
+    closing parenthesis, whitespace-collapsed."""
+    text = "\n".join(lines[i0 : i0 + 12])
+    start = SITE_RE.search(lines[i0]).start()
+    depth = 0
+    for j in range(start, len(text)):
+        if text[j] == "(":
+            depth += 1
+        elif text[j] == ")":
+            depth -= 1
+            if depth == 0:
+                return " ".join(text[start : j + 1].split())
+    return " ".join(text[start:].split())
+
+
 def collect_sites():
+    """Every ROUND site as (file, line, enclosing function, expression,
+    classification context)."""
     sites = []
     for dirpath, _dirnames, filenames in os.walk(PKG):
         for fn in sorted(filenames):
@@ -212,7 +264,9 @@ def collect_sites():
             path = os.path.join(dirpath, fn)
             rel = os.path.relpath(path, PKG)
             with open(path) as f:
-                lines = f.readlines()
+                source = f.read()
+            lines = source.splitlines()
+            spans = _enclosing_functions(source)
             for i0, line in enumerate(lines):
                 i = i0 + 1
                 stripped = line.strip()
@@ -236,7 +290,9 @@ def collect_sites():
                     ctx = " ".join(
                         x.strip() for x in lines[i0 : i0 + 4]
                     )
-                    sites.append((rel, i, ctx))
+                    sites.append(
+                        (rel, i, _enclosing(spans, i), _expression(lines, i0), ctx)
+                    )
     return sites
 
 
@@ -250,52 +306,72 @@ def classify(rel: str, text: str):
     return None, None
 
 
+def render(rows) -> str:
+    """ROUNDING.md for the classified ``rows`` (file, function,
+    expression, category): one table row per distinct key, with the
+    number of sites that share it."""
+    out = [
+        "# ROUND(double, s) whitelist",
+        "",
+        "Generated by `python tools/audit_rounding.py --write` — do",
+        "not edit by hand. Every remaining ROUND site in the engine,",
+        "classified by tie-risk category (reasons and the risk",
+        "acceptance statement in tools/audit_rounding.py's",
+        "docstring). The measured flip class — ratio-of-integer-",
+        "count ROUNDs — is banned outright; those sites were",
+        "migrated to ratio_dbl/pin_dbl (functions/scalars.py).",
+        "",
+        "| file | function | expression | sites | category |",
+        "|---|---|---|---|---|",
+    ]
+    for (rel, func, expr, cat), n in sorted(Counter(rows).items()):
+        cell = expr.replace("|", "\\|")
+        out.append(
+            f"| appeals_data_spark/{rel} | {func} | `{cell}` | {n} | {cat} |"
+        )
+    out.append("")
+    out.append("Category reasons:")
+    out.append("")
+    for cat, reason in CATEGORY_REASONS.items():
+        if cat == "ratio-int":
+            continue
+        out.append(f"- **{cat}** — {reason}")
+    out.append("")
+    return "\n".join(out)
+
+
 def main() -> int:
     write = "--write" in sys.argv
+    check = "--check" in sys.argv
     sites = collect_sites()
     rows = []
     unclassified = []
     banned = []
-    for rel, ln, text in sites:
+    for rel, ln, func, expr, text in sites:
         cat, reason = classify(rel, text)
         if cat is None:
             unclassified.append((rel, ln, text))
         elif cat == "ratio-int":
             banned.append((rel, ln, text))
         else:
-            rows.append((rel, ln, cat, text))
+            rows.append((rel, func, expr, cat))
+    md_path = os.path.join(ROOT, "ROUNDING.md")
+    md = render(rows)
     if write:
-        out = [
-            "# ROUND(double, s) whitelist",
-            "",
-            "Generated by `python tools/audit_rounding.py --write` — do",
-            "not edit by hand. Every remaining ROUND site in the engine,",
-            "classified by tie-risk category (reasons and the risk",
-            "acceptance statement in tools/audit_rounding.py's",
-            "docstring). The measured flip class — ratio-of-integer-",
-            "count ROUNDs — is banned outright; those sites were",
-            "migrated to ratio_dbl/pin_dbl (functions/scalars.py).",
-            "",
-            "| site | category |",
-            "|---|---|",
-        ]
-        for rel, ln, cat, _text in rows:
-            out.append(f"| appeals_data_spark/{rel}:{ln} | {cat} |")
-        out.append("")
-        out.append("Category reasons:")
-        out.append("")
-        for cat, reason in CATEGORY_REASONS.items():
-            if cat == "ratio-int":
-                continue
-            out.append(f"- **{cat}** — {reason}")
-        out.append("")
-        with open(os.path.join(ROOT, "ROUNDING.md"), "w") as f:
-            f.write("\n".join(out))
-    from collections import Counter
+        with open(md_path, "w") as f:
+            f.write(md)
 
-    counts = Counter(cat for _r, _l, cat, _t in rows)
+    counts = Counter(row[3] for row in rows)
     print(f"{len(sites)} ROUND sites: {dict(counts)}")
     ok = True
+    if check:
+        with open(md_path) as f:
+            if f.read() != md:
+                ok = False
+                print(
+                    "\nROUNDING.md is stale — run `python "
+                    "tools/audit_rounding.py --write` and commit the result"
+                )
     if banned:
         ok = False
         print(f"\nBANNED ratio-of-integer-count ROUND sites ({len(banned)}):")
