@@ -37,6 +37,15 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    """Every registered query: name -> ``builder(spark, sf_dir)``.
+
+    A builder may persist intermediates (and some run eager jobs) while
+    it builds its DataFrame, and it does not release them. A caller that
+    runs queries back to back on one session is expected to call
+    ``spark.catalog.clearCache()`` between queries, as ``bench.py``,
+    ``tools/ab.py`` and ``appbench`` do; otherwise the blocks pile up in
+    storage memory.
+    """
     return {name: q.builder for name, q in all_queries().items()}
 
 

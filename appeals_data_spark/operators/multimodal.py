@@ -18,13 +18,19 @@ which makes every decoded number oracle-checkable in DuckDB.
 
 from __future__ import annotations
 
+import sys
 from typing import Iterator
 
 import pandas as pd
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..catalog import sized_for_compute as _sized
+
+# The mapInPandas passes run in Python workers that need not have this
+# package on their path: ship the codecs and feature helpers by value.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 MEDIA_META_SCHEMA = "struct<mime:string,width:int,height:int,n_frames:int>"
 

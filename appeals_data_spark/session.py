@@ -28,36 +28,30 @@ RUNTIME_CONFS = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
-    # Scale-adaptive REDUCE-side sizing (round 12): shuffles START at
-    # this many partitions and AQE coalesces them down to the
-    # advisory size with the parallelism floor — at bench scale the
-    # post-coalesce counts land where the old static
-    # max(cores, 32) did (parallelismFirst, the default, keeps
-    # >= defaultParallelism), while at the 1000x probe a shuffled-hash
-    # build over vocab-scale tables gets data-many partitions instead
-    # of 32 local-mode buckets (measured: the LM scoring join's
-    # ~600 MB-per-partition UnsafeHashedRelation x 32 concurrent
-    # builds OOM'd a 48 g heap; at 1024 initial partitions each build
-    # is ~25 MB). AQE can only coalesce DOWN — the static conf is a
-    # local-mode constant in disguise, exactly the class the
-    # optimization guide warns about. Env-overridable for bigger
-    # deployments (a real cluster would size it near max concurrent
-    # cores x a few).
+    # Scale-adaptive reduce-side sizing: shuffles start at this many
+    # partitions and AQE coalesces them down to the advisory size with
+    # the parallelism floor. At bench scale the post-coalesce counts
+    # land at about max(cores, 32) (parallelismFirst, the default,
+    # keeps >= defaultParallelism), while at the 1000x probe a
+    # shuffled-hash build over vocab-scale tables gets data-many
+    # partitions instead of 32 local-mode buckets (32 concurrent
+    # ~600 MB UnsafeHashedRelation builds of the LM scoring join
+    # exhaust a 48 g heap; at 1024 each build is ~25 MB). AQE can only
+    # coalesce down, so a static count would be a local-mode constant
+    # in disguise. Env-overridable for bigger deployments (a real
+    # cluster would size it near max concurrent cores x a few).
     "spark.sql.adaptive.coalescePartitions.initialPartitionNum": os.environ.get(
         "SPARK_GRAFT_INIT_PARTITIONS", "1024"
     ),
-    # Round 13: initialPartitionNum=1024 alone regressed every query
-    # that PERSISTS a shuffled intermediate (dedup_minhash_lsh 1.7 ->
-    # 4.4 s, dedup_simhash_hamming 2.7 -> 4.6 s interleaved A/B at
-    # sf0.1): AQE may not re-plan inside an InMemoryRelation by
-    # default, so the cached frame materializes at the full 1024
-    # partitions and every consumer stage pays 1024 task launches.
-    # This conf lets AQE coalesce cached plans too (measured: cand
-    # cache 1024 -> 1 partition; minhash back to 1.47 s, simhash to
-    # 2.68 s — at parity with the static-32 r11 config while the
-    # 1000x-probe OOM fix stands). Trade-off: a cached plan's output
+    # Without this, initialPartitionNum=1024 makes every query that
+    # persists a shuffled intermediate pay 1024 task launches per
+    # consumer stage: AQE may not re-plan inside an InMemoryRelation
+    # by default, so the cached frame keeps the full 1024 partitions
+    # (dedup_minhash_lsh 4.4 s and dedup_simhash_hamming 4.6 s at
+    # sf0.1, against 1.47 s and 2.68 s with it; the minhash candidate
+    # cache coalesces 1024 -> 1). Trade-off: a cached plan's output
     # partitioning is no longer a co-partitioning guarantee for
-    # consumers — the engine's iterative co-partitioned loops use
+    # consumers; the engine's iterative co-partitioned loops use
     # checkpoints under aqe_disabled (operators/graph.py), not
     # persist, so nothing here relies on that guarantee.
     "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
@@ -111,14 +105,10 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
-        # No stderr progress bars: they polluted the driver's bench
-        # capture (BENCH_r03/r04 tails were nothing but bar redraws,
-        # leaving "parsed": null) and add nothing headless. Must be set
-        # pre-SparkContext — it is read once at context init.
+        # No stderr progress bars: their redraws fill a tail-captured
+        # stdout/stderr and add nothing headless. Must be set before
+        # the SparkContext starts; it is read once at context init.
         .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # Arrow for any pandas-UDF path and fast toPandas.
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
     )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)
@@ -127,10 +117,10 @@ def get_spark(
 
 # -- scoped AQE toggle for iterative loops -------------------------------------
 #
-# Checkpoints taken under AQE record UnknownPartitioning (the round-10
-# loop-discipline finding, operators/graph.py), so the iterative
-# operators disable AQE for their loop and restore it after. The conf
-# is SESSION-GLOBAL: a naive save/set/restore pair is not reentrant —
+# Checkpoints taken under AQE record UnknownPartitioning
+# (operators/graph.py), so the iterative operators disable AQE for
+# their loop and restore it after. The conf is SESSION-GLOBAL: a
+# naive save/set/restore pair is not reentrant —
 # two interleaved loops on the same session could each save the
 # other's "false" and leave AQE off for every later query. This
 # context manager refcounts per UNDERLYING SQL SESSION (the JVM
@@ -141,11 +131,10 @@ def get_spark(
 # wrappers around the SAME JVM session — re-wrapping via
 # SparkSession(sc, jsparkSession) or mixed getActiveSession paths —
 # must share one counter over the one session-global conf, or the
-# save/restore race the refcount guards against comes back,
-# round-12 review fix). Entries are created on the outermost enter
-# and deleted on the matching outermost exit (the contextmanager's
-# ``finally`` guarantees it), so a recycled key can never see a
-# stale entry.
+# save/restore race the refcount guards against comes back). Entries
+# are created on the outermost enter and deleted on the matching
+# outermost exit (the contextmanager's ``finally`` guarantees it), so
+# a recycled key can never see a stale entry.
 # Only the OUTERMOST enter saves the ambient value and only the
 # matching outermost exit restores it. (Queries planned by OTHER
 # threads on the SAME session while a loop holds the toggle still

@@ -1,8 +1,15 @@
-"""Benchmark harness — runs the headline (bench-flagged) queries.
+"""Benchmark harness and the one timed query run.
 
-Prints ONE JSON line:
-  {"metric": "...", "value": <total sec>, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": <scale factor>}
+``python bench.py`` times the headline (bench-flagged) queries and a
+secondary suite at one scale, two runs per query, and prints ONE final
+JSON line:
+  {"metric": "headline_suite_seconds", "value": <total sec>, "unit": "sec",
+   "queries": {name: sec, ...}, "secondary": {...}, "sf": <scale factor>}
+The full record, with per-query build seconds, goes to an earlier
+``BENCH_DETAIL`` line and to ``bench_detail.json``.
+
+``warm``, ``timed_run`` and ``cpu_sample`` are the timing primitives
+``tools/ab.py`` shares.
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
      SPARK_GRAFT_CPUS (default all cores).
@@ -16,24 +23,22 @@ import re
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
 
-from appeals_data_spark.registry import all_queries
-from appeals_data_spark.session import get_spark
+from appeals_data_spark.registry import all_queries  # noqa: E402
+from appeals_data_spark.session import get_spark  # noqa: E402
 
-# Secondary timing suite: the round-3/4 operator families that are not
-# in the frozen headline 16 (kept frozen for cross-round
-# comparability) but need a timing series of their own — compressed-
-# domain ANN, tokenizer training, corpus scoring, substring dedup,
-# sliding windows, the iterative model fits. Reported under the
-# "secondary" key with the same two-run/min discipline; the headline
-# "value" stays untouched.
+# Secondary timing suite: operator families outside the frozen headline
+# 16 (kept frozen so the series stays comparable) that need a timing
+# series of their own: compressed-domain ANN, tokenizer training,
+# corpus scoring, substring dedup, sliding windows, the iterative model
+# fits. Reported under the "secondary" key with the same two-run/min
+# discipline; the headline "value" does not include them.
 SECONDARY = [
     "a21_sliding_mau",
     "a25_countmin_bound",
     "a26_hll_setops_bound",
-    # round 10: the two AQE-off co-partitioned iterative loops and the
-    # xxhash64 DSIR production twin join the timing series
     "closure_components",
     "dedup_canonical_corpus",
     "pipe_dsir_importance_prod",
@@ -82,36 +87,29 @@ SECONDARY = [
     "x6_logistic_glmm",
 ]
 
+# A steal burst during the headline window inflates the number the
+# series is judged on: above this steal share the headline suite runs
+# once more (see main).
+HEADLINE_STEAL_MAX = 0.5
 
-def _cpu_stat():
-    """Sample /proc/stat: (total_jiffies, steal_jiffies, ctxt, t).
-    Returns None on non-Linux — the fields then emit as null."""
+
+def cpu_sample():
+    """One /proc/stat reading: (total jiffies, steal jiffies, context
+    switches, wall time), or None where it is missing or malformed; the
+    fields derived from it are then null."""
     try:
-        total = steal = ctxt = None
         with open("/proc/stat") as f:
-            for line in f:
-                parts = line.split()
-                if parts[0] == "cpu":
-                    vals = [int(x) for x in parts[1:]]
-                    total = sum(vals)
-                    steal = vals[7] if len(vals) > 7 else 0
-                elif parts[0] == "ctxt":
-                    ctxt = int(parts[1])
-        if total is None or ctxt is None:
-            return None
-        return (total, steal, ctxt, time.time())
-    except (OSError, ValueError, IndexError):
-        # Documented degradation: a malformed /proc/stat line emits
-        # null env fields instead of aborting the whole bench run.
+            stat = {p[0]: p[1:] for p in map(str.split, f) if p}
+        cpu = [int(x) for x in stat["cpu"]]
+        return sum(cpu), (cpu[7] if len(cpu) > 7 else 0), int(stat["ctxt"][0]), time.time()
+    except (OSError, ValueError, IndexError, KeyError):
         return None
 
 
-def _env_sample(before, after):
-    """steal% and context-switch rate over the timed region — the
-    self-adjudication record (round-11 verdict item: BENCH_r10's
-    secondary +87% was hypervisor steal, but the artifact carried no
-    steal field, so a driver-side reader needed a judge re-measure to
-    dismiss it). Dismissibility rule in BASELINE.md."""
+def env_sample(before, after):
+    """Steal share and context-switch rate between two ``cpu_sample``s,
+    so a reader can tell a busy host from a slow engine without
+    re-measuring (dismissibility rule in BASELINE.md)."""
     if before is None or after is None:
         return {"steal_pct": None, "ctxt_per_s": None}
     dt_total = after[0] - before[0]
@@ -126,24 +124,49 @@ def _env_sample(before, after):
     }
 
 
+def warm(spark, queries, sf_dir):
+    """Run each query once on ``sf_dir``, untimed, after one parquet read
+    and one mapInPandas pass. Codegen compiles once per expression tree
+    and JVM, and the Arrow worker pool starts once; without this the
+    first timed run of a query bills seconds of that to itself. Drops
+    the blocks the queries persisted."""
+    spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
+    spark.range(64).repartition(8).mapInPandas(lambda b: b, schema="id long").count()
+    for q in queries:
+        try:
+            q.builder(spark, sf_dir).collect()
+        except Exception:
+            pass  # warm-up must never fail the run; the timed run reports it
+    spark.catalog.clearCache()
+
+
+def timed_run(spark, q, sf_dir):
+    """Build and collect one query: (build seconds, total seconds, rows).
+
+    Build is the builder call: catalog reads, planning and any eager job
+    inside the builder. Total adds the collect. The blocks the query
+    persisted are dropped after the clock stops, so every run starts
+    from the same storage state."""
+    t0 = time.perf_counter()
+    df = q.builder(spark, sf_dir)
+    t1 = time.perf_counter()
+    rows = df.collect()
+    t2 = time.perf_counter()
+    spark.catalog.clearCache()
+    return t1 - t0, t2 - t0, rows
+
+
 def _time_suite(spark, qs, sf_dir):
-    """Two timed runs per query, returns (min-timings, first-run
-    timings) — the headline suite's exact discipline."""
-    timings: dict[str, float] = {}
-    firsts: dict[str, float] = {}
+    """Two timed runs per query: per-query minimum total, first-run
+    total and minimum build seconds. The minimum is the steady-state
+    figure: one run on a shared JVM can catch a multi-second GC stall."""
+    best, first, build = {}, {}, {}
     for name, q in sorted(qs.items()):
-        best = None
-        for i in range(2):
-            t0 = time.time()
-            rows = q.builder(spark, sf_dir).collect()
-            dt = time.time() - t0
-            if i == 0:
-                firsts[name] = round(dt, 3)
-            best = dt if best is None or dt < best else best
-            assert rows is not None
-            spark.catalog.clearCache()
-        timings[name] = round(best, 3)
-    return timings, firsts
+        runs = [timed_run(spark, q, sf_dir)[:2] for _ in range(2)]
+        first[name] = round(runs[0][1], 3)
+        best[name] = round(min(r[1] for r in runs), 3)
+        build[name] = round(min(r[0] for r in runs), 3)
+    return best, first, build
 
 
 def main() -> None:
@@ -151,112 +174,68 @@ def main() -> None:
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
 
-    spark = get_spark("bench")
-    spark.sparkContext.setLogLevel("ERROR")
-
     qs_all = all_queries()
-    qs = {name: q for name, q in qs_all.items() if q.bench}
-    # warm the JVM, FS metadata, and the Arrow/Python worker pool
-    # outside the timed region (first use otherwise bills several
-    # seconds of one-time spin-up to an arbitrary query)
-    spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
-    spark.range(64).repartition(8).mapInPandas(
-        lambda batches: batches, schema="id long"
-    ).count()
-    # Whole-stage-codegen compile is one-time per (expression tree,
-    # JVM) and cached; running each query once at the smoke scale
-    # compiles every generated class cheaply so the timed region below
-    # measures steady-state data work, not JIT compile (the compile
-    # otherwise bills ~2-3s to whichever complex query runs first).
-    smoke_dir = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
-    warm_dir = smoke_dir if os.path.isdir(smoke_dir) else sf_dir
-    # fail loudly on a typo'd/renamed SECONDARY entry — a silent drop
-    # would shrink the cross-round timing series without anyone noticing
+    # fail loudly on a typo'd or renamed SECONDARY entry: a silent drop
+    # would shrink the timing series without anyone noticing
     unknown = [n for n in SECONDARY if n not in qs_all]
     if unknown:
         raise SystemExit(f"bench.py: unknown SECONDARY queries: {unknown}")
+    qs = {name: q for name, q in qs_all.items() if q.bench}
     sec_qs = {n: qs_all[n] for n in SECONDARY}
-    for q in list(qs.values()) + list(sec_qs.values()):
-        try:
-            q.builder(spark, warm_dir).collect()
-        except Exception:
-            pass  # warmup must never fail the bench
 
-    # Warmup leaves persisted blocks (queries persist intermediates
-    # internally); drop them so timed queries aren't competing with
-    # stale cache for storage memory and GC.
-    spark.catalog.clearCache()
-    # Two timed runs per query, report the min: single-shot timings on
-    # a shared JVM occasionally catch a multi-second GC/compile stall
-    # on one arbitrary query (observed: 2s queries billed 13s); the
-    # per-query minimum is the steady-state number. Declared in the
-    # JSON so the aggregation is auditable.
-    # Both aggregations are reported so the cross-round series stays
-    # comparable: round 1 recorded single-run numbers, round 2
-    # best-of-two. "value"/agg=min stays the headline (steady-state,
-    # robust to one-off GC/compile stalls on a shared JVM); "first"
-    # is the run-1-comparable single-pass number.
-    # Headline dismissibility (round-12 verdict item #6): a steal
-    # burst during the headline window inflates the number the series
-    # is judged on — BENCH_r11's 19.95s sat at steal 1.66%, just under
-    # the old >=2.0% threshold, while the idle-box record was 14.24s.
-    # New rule: if the headline region's steal exceeds 0.5%, re-run
-    # the headline suite once and record BOTH attempts; the reported
-    # per-query timings are the per-query minimum across attempts (the
-    # cleanest observation of each query), and the attempts array in
-    # the artifact lets a reader adjudicate without a re-measure.
-    HEADLINE_STEAL_MAX = 0.5
-    attempts = []
-    stat0 = _cpu_stat()
-    timings, firsts = _time_suite(spark, qs, sf_dir)
-    stat_mid = _cpu_stat()
-    env_a1 = _env_sample(stat0, stat_mid)
-    attempts.append({"value": round(sum(timings.values()), 3), **env_a1})
-    if env_a1["steal_pct"] is not None and env_a1["steal_pct"] > HEADLINE_STEAL_MAX:
-        stat_r0 = _cpu_stat()
-        timings2, _ = _time_suite(spark, qs, sf_dir)
-        stat_mid = _cpu_stat()
-        env_a2 = _env_sample(stat_r0, stat_mid)
-        attempts.append({"value": round(sum(timings2.values()), 3), **env_a2})
+    spark = get_spark("bench")
+    spark.sparkContext.setLogLevel("ERROR")
+    # Compile cost does not depend on data size: warm on the smoke
+    # layout next to sf_dir when there is one.
+    smoke_dir = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
+    warm(spark, [*qs.values(), *sec_qs.values()], smoke_dir if os.path.isdir(smoke_dir) else sf_dir)
+
+    # When the headline region's steal exceeds HEADLINE_STEAL_MAX, run
+    # the headline suite once more; each query keeps its faster attempt
+    # and every attempt's window is recorded, so a reader can
+    # adjudicate without re-measuring.
+    stat0 = cpu_sample()
+    timings, firsts, builds = _time_suite(spark, qs, sf_dir)
+    stat_mid = cpu_sample()
+    attempts = [{"value": round(sum(timings.values()), 3), **env_sample(stat0, stat_mid)}]
+    if attempts[0]["steal_pct"] is not None and attempts[0]["steal_pct"] > HEADLINE_STEAL_MAX:
+        stat_r0 = cpu_sample()
+        timings2, _, builds2 = _time_suite(spark, qs, sf_dir)
+        stat_mid = cpu_sample()
+        attempts.append({"value": round(sum(timings2.values()), 3), **env_sample(stat_r0, stat_mid)})
         timings = {n: min(timings[n], timings2[n]) for n in timings}
-    sec_timings, sec_firsts = _time_suite(spark, sec_qs, sf_dir)
-    stat1 = _cpu_stat()
-    total = round(sum(timings.values()), 3)
+        builds = {n: min(builds[n], builds2[n]) for n in builds}
+    sec_timings, sec_firsts, sec_builds = _time_suite(spark, sec_qs, sf_dir)
+    stat1 = cpu_sample()
     try:
         load_avg = round(os.getloadavg()[0], 2)
     except OSError:
         load_avg = None
-    # Stop Spark BEFORE printing: the JSON record must be the final
-    # line of output (the driver tail-captures combined stdout/stderr;
-    # r3/r4 artifacts lost the record to trailing executor-shutdown
-    # noise and progress bars — bars are now off in session.py too).
-    # Guarded: JVM-shutdown noise must never lose the record the run
-    # already paid for.
+    # Stop Spark before printing: the record must be the last line of
+    # output, after any executor-shutdown noise. Guarded: a shutdown
+    # error must not lose the record the run already paid for.
     try:
         spark.stop()
     except Exception:
         pass
-    # Top-level steal/ctxt report the CLEANEST headline attempt (the
-    # one whose conditions the per-query minima effectively reflect);
-    # the attempts array carries every window for adjudication.
-    env_head = min(
-        attempts,
-        key=lambda a: a["steal_pct"] if a["steal_pct"] is not None else 0.0,
-    )
-    env_sec = _env_sample(stat_mid, stat1)
+    # Top-level steal/ctxt report the cleanest headline attempt, the one
+    # whose conditions the per-query minima mostly reflect.
+    env_head = min(attempts, key=lambda a: a["steal_pct"] or 0.0)
+    env_sec = env_sample(stat_mid, stat1)
     detail = {
         "metric": "headline_suite_seconds",
         "load_avg_1m": load_avg,
         "steal_pct": env_head["steal_pct"],
         "ctxt_per_s": env_head["ctxt_per_s"],
         "headline_attempts": attempts,
-        "value": total,
+        "value": round(sum(timings.values()), 3),
         "runs_per_query": 2,
         "agg": "min",
         "unit": "sec",
         "queries": timings,
         "first_run_value": round(sum(firsts.values()), 3),
         "first_run_queries": firsts,
+        "build_s": builds,
         "secondary": {
             "value": round(sum(sec_timings.values()), 3),
             "steal_pct": env_sec["steal_pct"],
@@ -264,30 +243,21 @@ def main() -> None:
             "queries": sec_timings,
             "first_run_value": round(sum(sec_firsts.values()), 3),
             "first_run_queries": sec_firsts,
+            "build_s": sec_builds,
         },
         "sf": sf,
     }
-    # Full per-query detail goes to a file + an EARLIER stdout line;
-    # the FINAL line is a compact record (<1.5KB) so it survives the
-    # driver's ~2.2KB stdout tail capture intact (BENCH_r03/r04/r05
-    # all recorded "parsed": null because the 2.4KB full record was
-    # front-truncated even as the last line).
-    with open(
-        os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                     "bench_detail.json"), "w"
-    ) as f:
+    with open(os.path.join(ROOT, "bench_detail.json"), "w") as f:
         json.dump(detail, f, indent=1)
     print("BENCH_DETAIL " + json.dumps(detail))
-    compact = dict(detail)
-    del compact["first_run_queries"]
+    # The final line stays under 1.5 KB so a ~2.2 KB tail capture of the
+    # output keeps it whole; the per-query detail is above and on disk.
+    compact = {k: v for k, v in detail.items() if k not in ("first_run_queries", "build_s")}
     compact["secondary"] = {
-        "value": detail["secondary"]["value"],
-        "first_run_value": detail["secondary"]["first_run_value"],
-        "steal_pct": detail["secondary"]["steal_pct"],
-        "ctxt_per_s": detail["secondary"]["ctxt_per_s"],
+        k: detail["secondary"][k] for k in ("value", "first_run_value", "steal_pct", "ctxt_per_s")
     }
     line = json.dumps(compact)
-    if len(line) > 1500:  # never regress past the capture window again
+    if len(line) > 1500:
         del compact["queries"]
         line = json.dumps(compact)
     print(line)

@@ -13,7 +13,7 @@ import argparse
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from appeals_data_spark.registry import all_queries  # noqa: E402
 from appeals_data_spark.session import get_spark  # noqa: E402
