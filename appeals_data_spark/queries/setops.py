@@ -214,8 +214,7 @@ def u5_event_where_hook(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = events_all(
         spark,
         sf_dir,
-        where=F.col("event_type").like("order%")
-        & (F.col("ts") >= F.lit("1995-01-01").cast("timestamp_ntz")),
+        where="event_type LIKE 'order%' AND ts >= TIMESTAMP_NTZ '1995-01-01'",
     )
     return (
         ev.groupBy("entity_id")

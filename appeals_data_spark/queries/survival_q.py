@@ -1406,109 +1406,76 @@ def x6_logistic_glmm(spark: SparkSession, sf_dir: str) -> DataFrame:
     #groups-sized table — one plan, one extra exchange, no per-round
     jobs, no driver collect (contrast x3_logistic_irls, whose
     sufficient stats are fact-scale and need a broadcast-back per
-    round)."""
-    from pyspark.sql.window import Window
-
+    round). Each dependent step of a round is one projection written
+    as SQL expression text, so building the plan costs a few Py4J
+    round trips per step instead of one per Column operator."""
     o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    t1 = F.col("o_orderkey") % 2 == 1
-    fin = F.col("o_orderstatus") == "F"
+    t1, fin = "o_orderkey % 2 = 1", "o_orderstatus = 'F'"
     d = (
         o.join(c, o["o_custkey"] == c["c_custkey"])
         .groupBy(F.col("c_nationkey").alias("grp"))
         .agg(
-            F.sum(F.when(~t1, 1).otherwise(0)).alias("n0"),
-            F.sum(F.when(~t1 & fin, 1).otherwise(0)).alias("k0"),
-            F.sum(F.when(t1, 1).otherwise(0)).alias("n1"),
-            F.sum(F.when(t1 & fin, 1).otherwise(0)).alias("k1"),
+            *(
+                F.expr(f"SUM(CASE WHEN {cond} THEN 1 ELSE 0 END) AS {name}")
+                for name, cond in (
+                    ("n0", f"NOT ({t1})"),
+                    ("k0", f"NOT ({t1}) AND {fin}"),
+                    ("n1", t1),
+                    ("k1", f"{t1} AND {fin}"),
+                )
+            )
         )
-        .withColumn("u", F.lit(0.0))
-        .withColumn("b0", F.lit(0.0))
-        .withColumn("beta", F.lit(0.0))
-        .withColumn("tau2", F.lit(0.25))
+        .selectExpr("*", "0.0D AS u", "0.0D AS b0", "0.0D AS beta", "0.25D AS tau2")
     )
-    wall = Window.partitionBy()
+    cells = ("grp", "n0", "k0", "n1", "k1")
 
-    def sig(eta):
-        return F.lit(1.0) / (F.lit(1.0) + F.exp(-eta))
+    # Every whole-frame fold rounds its summand to 12 dp and
+    # accumulates in DECIMAL(38,12): the sums are then exact, so the
+    # fit is bit-identical under any partitioning (the
+    # partitioning-independence gate) and neither engine's
+    # accumulation order matters. 12 dp dwarfs the 6 dp output
+    # rounding; the identical ROUND(.,12)+CAST appears in the oracle
+    # CTEs.
+    def dsum(x: str) -> str:
+        return f"CAST(SUM(CAST(ROUND({x}, 12) AS DECIMAL(38,12))) OVER () AS DOUBLE)"
 
+    def irls(t: str) -> tuple[str, str]:
+        """Arm t's IRLS weight W = n w and working mean z."""
+        mu = f"(1.0D / (1.0D + EXP(-eta{t})))"
+        w = f"({mu} * (1 - {mu}))"
+        return (
+            f"CASE WHEN n{t} > 0 THEN n{t} * {w} END AS w{t}",
+            f"CASE WHEN n{t} > 0 THEN eta{t} + (CAST(k{t} AS DOUBLE) / n{t} - {mu})"
+            f" / {w} END AS z{t}",
+        )
+
+    both = "CASE WHEN n0 > 0 AND n1 > 0 THEN {} END"
+    h = "(w1 * w0 / (w1 + w0))"
+    wt = "(COALESCE(w0, 0.0D) + COALESCE(w1, 0.0D))"
+    shrink = "(tau2 / (tau2 + s2))"
+    tau2_summand = f"POWER({shrink} * (zadj - b0), 2) + {shrink} * s2"
+    # One projection per dependent step of a PQL round.
     for _ in range(3):
-        d = d.withColumn("eta0", F.col("b0") + F.col("u")).withColumn(
-            "eta1", F.col("b0") + F.col("beta") + F.col("u")
+        d = d.selectExpr(*cells, "tau2", "b0 + u AS eta0", "b0 + beta + u AS eta1")
+        d = d.selectExpr(*cells, "tau2", *irls("0"), *irls("1"))
+        d = d.selectExpr(
+            *cells, "tau2", "w0", "z0", "w1", "z1",
+            f"{dsum(both.format(f'(z1 - z0) * {h}'))} / {dsum(both.format(h))} AS beta",
         )
-        mu0, mu1 = sig(F.col("eta0")), sig(F.col("eta1"))
-        w0c, w1c = mu0 * (1 - mu0), mu1 * (1 - mu1)
-        d = (
-            d.withColumn("w0", F.when(F.col("n0") > 0, F.col("n0") * w0c))
-            .withColumn(
-                "z0",
-                F.when(
-                    F.col("n0") > 0,
-                    F.col("eta0")
-                    + (F.col("k0").cast("double") / F.col("n0") - mu0) / w0c,
-                ),
-            )
-            .withColumn("w1", F.when(F.col("n1") > 0, F.col("n1") * w1c))
-            .withColumn(
-                "z1",
-                F.when(
-                    F.col("n1") > 0,
-                    F.col("eta1")
-                    + (F.col("k1").cast("double") / F.col("n1") - mu1) / w1c,
-                ),
-            )
+        d = d.selectExpr(
+            *cells, "tau2", "beta",
+            f"(COALESCE(w0 * z0, 0.0D) + COALESCE(w1 * (z1 - beta), 0.0D)) / {wt} AS zadj",
+            f"1.0D / {wt} AS s2",
         )
-        both = (F.col("n0") > 0) & (F.col("n1") > 0)
-        h = F.col("w1") * F.col("w0") / (F.col("w1") + F.col("w0"))
-
-        # Every whole-frame fold rounds its summand to 12 dp and
-        # accumulates in DECIMAL(38,12): the sums are then exact, so
-        # the fit is bit-identical under any partitioning (the
-        # partitioning-independence gate) and neither engine's
-        # accumulation order matters. 12 dp dwarfs the 6 dp output
-        # rounding; the identical ROUND(.,12)+CAST appears in the
-        # oracle CTEs.
-        def dsum(c):
-            return (
-                F.sum(F.round(c, 12).cast("decimal(38,12)"))
-                .over(wall)
-                .cast("double")
-            )
-
-        d = d.withColumn(
-            "beta",
-            dsum(F.when(both, (F.col("z1") - F.col("z0")) * h))
-            / dsum(F.when(both, h)),
+        d = d.selectExpr(
+            *cells, "tau2", "beta", "zadj", "s2",
+            f"{dsum('zadj / (tau2 + s2)')} / {dsum('1.0D / (tau2 + s2)')} AS b0",
         )
-        wt = F.coalesce(F.col("w0"), F.lit(0.0)) + F.coalesce(
-            F.col("w1"), F.lit(0.0)
-        )
-        d = d.withColumn(
-            "zadj",
-            (
-                F.coalesce(F.col("w0") * F.col("z0"), F.lit(0.0))
-                + F.coalesce(F.col("w1") * (F.col("z1") - F.col("beta")), F.lit(0.0))
-            )
-            / wt,
-        ).withColumn("s2", F.lit(1.0) / wt)
-        d = d.withColumn(
-            "b0",
-            dsum(F.col("zadj") / (F.col("tau2") + F.col("s2")))
-            / dsum(F.lit(1.0) / (F.col("tau2") + F.col("s2"))),
-        )
-        bshrink = F.col("tau2") / (F.col("tau2") + F.col("s2"))
-        tau2_summand = (
-            F.pow(bshrink * (F.col("zadj") - F.col("b0")), 2)
-            + bshrink * F.col("s2")
-        )
-        d = (
-            d.withColumn(
-                "tau2_new",
-                dsum(tau2_summand) / F.count(tau2_summand).over(wall),
-            )
-            .withColumn("u", bshrink * (F.col("zadj") - F.col("b0")))
-            .withColumn("tau2", F.col("tau2_new"))
-            .drop("eta0", "eta1", "w0", "z0", "w1", "z1", "zadj", "s2", "tau2_new")
+        d = d.selectExpr(
+            *cells, "b0", "beta",
+            f"{shrink} * (zadj - b0) AS u",
+            f"{dsum(tau2_summand)} / COUNT({tau2_summand}) OVER () AS tau2",
         )
     return d.select(
         "grp",
@@ -1519,10 +1486,7 @@ def x6_logistic_glmm(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(
             F.col("n1") > 0, ratio_dbl(F.col("k1"), F.col("n1"), 6)
         ).alias("raw_treated"),
-        F.round("u", 6).alias("u"),
-        F.round("b0", 6).alias("b0"),
-        F.round("beta", 6).alias("beta"),
-        F.round("tau2", 6).alias("tau2"),
+        *(F.expr(f"ROUND({c}, 6) AS {c}") for c in ("u", "b0", "beta", "tau2")),
     ).orderBy("grp")
 
 
@@ -1619,8 +1583,7 @@ def x3_linear_svm_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     int64 sums (features are exact <=2dp values, so the scaled
     contributions are exact integers) — every training round, and
     hence the coefficients themselves, is bit-deterministic under any
-    partitioning and identical across engines at codegen speed (the
-    DECIMAL(38,6) fold had the same exactness at ~2.7x the cost); the
+    partitioning and identical across engines at codegen speed; the
     5 dp coefficient rounding is presentational."""
     from ..ml.svm import pegasos_linear_svm
 
@@ -1680,7 +1643,7 @@ def x3_linear_svm_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         "tn",
         "fn",
         # count ratio: the ROUND(double, s) tie-flip class — exact
-        # decimal half-up, double final (round-11 migration)
+        # decimal half-up, double final
         ratio_dbl(
             F.col("tp") + F.col("tn"),
             F.col("tp") + F.col("fp") + F.col("tn") + F.col("fn"),
@@ -1780,8 +1743,8 @@ def bt_pair_stats_exploded(li: DataFrame) -> DataFrame:
     Σ C(n_p, 2) pair rows (8.7M at sf0.1 -> 8.7B at sf100) hit the
     exchange as struct-payload rows, and the partial hash aggregate
     falls back to sort-based spilling when the per-partition distinct
-    key set outgrows memory — the measured >58 GB disk cost that made
-    sf100 the registry's only 1000x DNF (round-10 verdict).
+    key set outgrows memory (>58 GB of spill at sf100, where this
+    generator does not finish).
 
     One explicit repartition on pk feeds BOTH aggregations (guide
     §2.4 — share one exchange between same-keyed operations):
@@ -1846,8 +1809,7 @@ def bt_pair_stats(li: DataFrame) -> DataFrame:
 def bt_pair_stats_chunked(li: DataFrame) -> DataFrame:
     """Chunk-aggregated pair statistics — the 1000x-scale path.
 
-    Round-11 scale shape (fixes the sf100 DNF): the half-pair table is
-    NEVER materialized as a row stream. ``unit`` (one row per
+    The half-pair table is NEVER materialized as a row stream. ``unit`` (one row per
     (part, supplier), fact-agg'd once) is RANGE-partitioned by part
     key and sorted (pk, sk) within partitions; an Arrow ``mapInPandas``
     pass then expands each part's C(n_p, 2) ordered pairs IN NUMPY
@@ -1958,8 +1920,8 @@ def bt_pair_stats_chunked(li: DataFrame) -> DataFrame:
     # DISK_ONLY checkpoint: the pair table is re-scanned (count probe +
     # one pass per MM round) but can reach 10s of GB at 1000x — caching
     # it MEMORY_AND_DISK competes with the final aggregation's hash
-    # maps for executor heap (the round-11 sf100 probe OOM'd exactly
-    # here at 48g). Disk blocks ride the OS page cache on re-scan; at
+    # maps for executor heap (an sf100 probe ran out of memory here
+    # at 48g). Disk blocks ride the OS page cache on re-scan; at
     # bench SFs (500k rows) the difference is noise.
     return (
         partials.groupBy("sa", "sb")
@@ -2008,11 +1970,9 @@ def pref_bradley_terry(spark: SparkSession, sf_dir: str) -> DataFrame:
     at any SF, NOT fact-sized) is checkpointed once and is the "small
     aggregate": all 3 MM rounds run in ONE applyInPandas over it
     (Arrow batch, numpy int64 scatter-folds) — one job, zero per-round
-    shuffles/broadcasts/checkpoints. Pure-JVM round alternatives were
-    measured slower at sf0.1: per-round broadcast-join rounds 7.0s
-    warm (r5), whole-frame-window + HOF-fold rounds 7.8s warm — the
-    suppliers-sized math is scheduling-floor-bound in Spark jobs, and
-    3.4s warm as a single Arrow fit (see BASELINE.md)."""
+    shuffles/broadcasts/checkpoints. Pure-JVM rounds (per-round
+    broadcast joins, or whole-frame windows with HOF folds) measured
+    slower at sf0.1 (see BASELINE.md)."""
     from ..ml.bt import bt_strengths
 
     li = load_table(spark, sf_dir, "lineitem")

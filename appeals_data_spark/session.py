@@ -47,13 +47,12 @@ RUNTIME_CONFS = {
     # persists a shuffled intermediate pay 1024 task launches per
     # consumer stage: AQE may not re-plan inside an InMemoryRelation
     # by default, so the cached frame keeps the full 1024 partitions
-    # (dedup_minhash_lsh 4.4 s and dedup_simhash_hamming 4.6 s at
-    # sf0.1, against 1.47 s and 2.68 s with it; the minhash candidate
-    # cache coalesces 1024 -> 1). Trade-off: a cached plan's output
-    # partitioning is no longer a co-partitioning guarantee for
-    # consumers; the engine's iterative co-partitioned loops use
-    # checkpoints under aqe_disabled (operators/graph.py), not
-    # persist, so nothing here relies on that guarantee.
+    # (with it, the minhash candidate cache coalesces 1024 -> 1).
+    # Trade-off: a cached plan's output partitioning is no longer a
+    # co-partitioning guarantee for consumers; the engine's iterative
+    # co-partitioned loops use checkpoints under aqe_disabled
+    # (operators/graph.py), not persist, so nothing here relies on
+    # that guarantee.
     "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
     # A vanilla session defaults to 10 MB — at bench scale every dim
     # fits well under 64 MB, so keep joins broadcast instead of SMJ.
@@ -66,12 +65,16 @@ RUNTIME_CONFS = {
 def tune(spark: SparkSession) -> SparkSession:
     """Apply runtime confs to an existing session (driver-provided).
 
-    All of RUNTIME_CONFS is runtime-settable, so even the external
-    driver's vanilla ``SparkSession`` picks up the engine's tuning the
-    first time it touches the catalog. Shuffle partitions are sized to
-    the session's actual core count — a vanilla session would otherwise
-    run every shuffle at the 200-partition default, which at local
-    scale is pure scheduling overhead per query.
+    Every key of RUNTIME_CONFS must be runtime-settable
+    (tests/test_session.py checks it), so even the external driver's
+    vanilla ``SparkSession`` picks up the engine's tuning the first
+    time it touches the catalog. A static key added there would do
+    nothing on that session: ``spark.conf.set`` raises for it and the
+    error is swallowed below. Static confs go on the builder in
+    ``get_spark``. Shuffle partitions are sized to the session's
+    actual core count — a vanilla session would otherwise run every
+    shuffle at the 200-partition default, which at local scale is
+    pure scheduling overhead per query.
     """
     confs = dict(RUNTIME_CONFS)
     try:
@@ -109,6 +112,12 @@ def get_spark(
         # stdout/stderr and add nothing headless. Must be set before
         # the SparkContext starts; it is read once at context init.
         .config("spark.ui.showConsoleProgress", "false")
+        # No Python call-site capture: with it on, every DataFrame and
+        # Column call adds an active-session lookup, a conf read and an
+        # origin set/clear over Py4J. Static, so it lives here and not
+        # in RUNTIME_CONFS. Set it to "true" locally to get the
+        # file:line DataFrameQueryContext back in builder errors.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)

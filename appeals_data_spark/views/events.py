@@ -3,89 +3,101 @@
 `R/events.R` converts wide tables into a long
 (entity, event_type, ts) stream via ~10 per-source extractors unioned
 at the end (events.R:923-991, SURVEY §1.4, R1, U1). Here each
-extractor is a lazy DataFrame builder; `events_all` is a single
-unionByName so Catalyst sees ONE plan covering extraction + union —
-scan sharing and pushdown happen across extractors, unlike the
-reference's 10 separate Oracle round trips (SURVEY §3.1).
+extractor is a lazy DataFrame built from one SQL text; `events_all`
+is a single union so Catalyst sees ONE plan covering extraction +
+union — scan sharing and pushdown happen across extractors, unlike
+the reference's 10 separate Oracle round trips (SURVEY §3.1).
 
 Canonical schema: (entity_id long, event_type string, ts timestamp_ntz,
-amount double nullable). Unpivot-style extractors use
-``DataFrame.unpivot`` — the direct analog of tidyr `gather`.
+amount double nullable). Unpivot-style extractors use SQL ``UNPIVOT``
+— the direct analog of tidyr `gather`.
 """
 
 from __future__ import annotations
 
-from functools import reduce
+from functools import reduce, wraps
+from string import Formatter
+from typing import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import literal_dim, load_table, sized_for_compute
 
-EVENT_SCHEMA_COLS = ["entity_id", "event_type", "ts", "amount"]
+
+def _union_sql(
+    spark: SparkSession, sf_dir: str, branches: list[str], where: str = "TRUE"
+) -> DataFrame:
+    """Conformed union of extractor SELECTs, issued as ONE ``spark.sql``.
+
+    Each branch is a SELECT whose output names are the canonical
+    columns (any order); each ``{table}`` it names is read through the
+    catalog. The canonical casts and the non-null ts filter wrap every
+    branch, so all branches agree on schema and union by position.
+    ``spark.sql`` binds the tables as temporary views and drops them
+    again before it returns; one statement is analysed once, where a
+    DataFrame union pays an analysis per branch and per union step."""
+    names = {name for b in branches for _, name, _, _ in Formatter().parse(b)}
+    frames = {name: load_table(spark, sf_dir, name) for name in names if name}
+    union = "\nUNION ALL\n".join(
+        "SELECT CAST(entity_id AS BIGINT) AS entity_id,"
+        " CAST(event_type AS STRING) AS event_type,"
+        " CAST(ts AS TIMESTAMP_NTZ) AS ts, CAST(amount AS DOUBLE) AS amount"
+        f" FROM ({b}) WHERE ts IS NOT NULL"
+        for b in branches
+    )
+    return spark.sql(f"SELECT * FROM ({union}) WHERE {where}", **frames)
 
 
-def _conform(df: DataFrame) -> DataFrame:
-    return df.select(
-        F.col("entity_id").cast("long"),
-        F.col("event_type").cast("string"),
-        F.col("ts").cast("timestamp_ntz"),
-        F.col("amount").cast("double"),
-    ).filter(F.col("ts").isNotNull())
+def _sql_extractor(select: Callable[[], str]):
+    """Extractor ``(spark, sf_dir) -> DataFrame`` from a function that
+    returns its SELECT text; the text stays on ``.sql`` so events_all
+    can union every branch in one statement."""
+    sql = select()
+
+    @wraps(select)
+    def extractor(spark: SparkSession, sf_dir: str) -> DataFrame:
+        return _union_sql(spark, sf_dir, [sql])
+
+    extractor.sql = sql
+    return extractor
 
 
-def order_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+@_sql_extractor
+def order_events() -> str:
     """Each order placement is an event on the customer."""
-    o = load_table(spark, sf_dir, "orders")
-    return _conform(
-        o.select(
-            F.col("o_custkey").alias("entity_id"),
-            F.lit("order_placed").alias("event_type"),
-            F.col("o_orderdate").alias("ts"),
-            F.col("o_totalprice").alias("amount"),
-        )
-    )
+    return """
+        SELECT o_custkey AS entity_id, 'order_placed' AS event_type,
+               o_orderdate AS ts, o_totalprice AS amount
+        FROM {orders}"""
 
 
-def shipment_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+@_sql_extractor
+def shipment_events() -> str:
     """Each line shipment is an event on the supplier."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return _conform(
-        li.select(
-            F.col("l_suppkey").alias("entity_id"),
-            F.lit("line_shipped").alias("event_type"),
-            F.col("l_shipdate").alias("ts"),
-            F.col("l_extendedprice").alias("amount"),
-        )
-    )
+    return """
+        SELECT l_suppkey AS entity_id, 'line_shipped' AS event_type,
+               l_shipdate AS ts, l_extendedprice AS amount
+        FROM {lineitem}"""
 
 
-def user_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+@_sql_extractor
+def user_events() -> str:
     """The raw clickstream table, conformed."""
-    e = load_table(spark, sf_dir, "events")
-    return _conform(
-        e.select(
-            F.col("user_id").alias("entity_id"),
-            F.col("event_type"),
-            F.col("ts"),
-            F.col("value").alias("amount"),
-        )
-    )
+    return """
+        SELECT user_id AS entity_id, event_type, ts, value AS amount
+        FROM {events}"""
 
 
-def return_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+@_sql_extractor
+def return_events() -> str:
     """Returned lines are events on the supplier (filter-extractor
     shape: most of the reference's extractors are base table + WHERE,
     events.R:38-43)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return _conform(
-        li.filter(F.col("l_returnflag") == "R").select(
-            F.col("l_suppkey").alias("entity_id"),
-            F.lit("line_returned").alias("event_type"),
-            F.col("l_shipdate").alias("ts"),
-            F.col("l_extendedprice").alias("amount"),
-        )
-    )
+    return """
+        SELECT l_suppkey AS entity_id, 'line_returned' AS event_type,
+               l_shipdate AS ts, l_extendedprice AS amount
+        FROM {lineitem} WHERE l_returnflag = 'R'"""
 
 
 # End-state classifier: code -> event label, inner join => also filters
@@ -95,22 +107,21 @@ def return_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 END_STATE_CLASSIFIER = (("F", "order_finished"), ("P", "order_in_process"))
 
 
-def end_state_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = load_table(spark, sf_dir, "orders")
-    classifier = literal_dim(
-        spark, END_STATE_CLASSIFIER, "o_orderstatus string, event_type string"
-    )
-    return _conform(
-        o.join(F.broadcast(classifier), "o_orderstatus").select(
-            F.col("o_custkey").alias("entity_id"),
-            F.col("event_type"),
-            F.col("o_orderdate").alias("ts"),
-            F.col("o_totalprice").alias("amount"),
-        )
-    )
+_END_STATE_ROWS = ", ".join(f"('{c}', '{t}')" for c, t in END_STATE_CLASSIFIER)
 
 
-def session_start_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+@_sql_extractor
+def end_state_events() -> str:
+    return f"""
+        SELECT /*+ broadcast(c) */ o_custkey AS entity_id, c.event_type,
+               o_orderdate AS ts, o_totalprice AS amount
+        FROM {{orders}}
+        JOIN (VALUES {_END_STATE_ROWS}) AS c(o_orderstatus, event_type)
+          USING (o_orderstatus)"""
+
+
+@_sql_extractor
+def session_start_events() -> str:
     """Window-parsed extractor: a 'session_started' event wherever a
     user's gap from the previous raw event exceeds 30 minutes (or the
     stream begins). Mirrors the reference's derived extractors, which
@@ -121,27 +132,17 @@ def session_start_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     excludes undated rows, so they must not act as run/gap neighbors —
     and Spark's nulls-first vs DuckDB's nulls-last ordering would
     otherwise diverge)."""
-    from pyspark.sql.window import Window
-
-    e = load_table(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    prev = F.lag("ts").over(w)
-    return _conform(
-        e.withColumn("_prev", prev)
-        .filter(
-            F.col("_prev").isNull()
-            | (F.col("ts") >= F.col("_prev") + F.expr("interval 30 minutes"))
-        )
-        .select(
-            F.col("user_id").alias("entity_id"),
-            F.lit("session_started").alias("event_type"),
-            F.col("ts"),
-            F.lit(None).cast("double").alias("amount"),
-        )
-    )
+    return """
+        SELECT user_id AS entity_id, 'session_started' AS event_type, ts,
+               CAST(NULL AS DOUBLE) AS amount
+        FROM (SELECT user_id, ts, LAG(ts) OVER (PARTITION BY user_id
+                                                ORDER BY ts, event_id) AS _prev
+              FROM {events} WHERE ts IS NOT NULL)
+        WHERE _prev IS NULL OR ts >= _prev + INTERVAL 30 MINUTES"""
 
 
-def hearing_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+@_sql_extractor
+def hearing_events() -> str:
     """Relabel+patch extractor (events.R:540-549):
     ``EVENT_TYPE = ifelse(HEARING_DISP == "H", "HEARING",
     "HEARING_EXCEPTION")`` with R's NA-PROPAGATING ifelse — a NULL
@@ -159,64 +160,46 @@ def hearing_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     as hearing records, disp = H/X/NULL banded on value, close date =
     ts+3d for value>10.
     """
-    from ..functions.scalars import r_ifelse
+    from ..functions.scalars import SQL_R_IFELSE
 
-    e = load_table(spark, sf_dir, "events")
-    h = e.filter(F.col("event_type") == "signup").select(
-        "user_id",
-        "ts",
-        "value",
-        F.when(F.col("value") > 30, "H").when(F.col("value") > 20, "X").alias("disp"),
-        F.when(
-            F.col("value") > 10, F.col("ts") + F.expr("interval 3 days")
-        ).alias("clsdate"),
+    label = SQL_R_IFELSE.format(
+        cond="disp = 'H'", yes="'HEARING'", no="'HEARING_EXCEPTION'"
     )
-    label = r_ifelse(
-        F.col("disp") == "H", F.lit("HEARING"), F.lit("HEARING_EXCEPTION")
-    )
-    patched = F.when(
-        (label == "HEARING_EXCEPTION") & F.col("clsdate").isNotNull(),
-        F.col("clsdate"),
-    ).otherwise(F.col("ts"))
-    return _conform(
-        h.select(
-            F.col("user_id").alias("entity_id"),
-            label.alias("event_type"),
-            patched.alias("ts"),
-            F.col("value").alias("amount"),
-        )
-    )
+    return f"""
+        SELECT user_id AS entity_id, event_type,
+               CASE WHEN event_type = 'HEARING_EXCEPTION' AND clsdate IS NOT NULL
+                    THEN clsdate ELSE ts END AS ts,
+               value AS amount
+        FROM (SELECT user_id, ts, value, clsdate, {label} AS event_type
+              FROM (SELECT user_id, ts, value,
+                           CASE WHEN value > 30 THEN 'H'
+                                WHEN value > 20 THEN 'X' END AS disp,
+                           CASE WHEN value > 10 THEN ts + INTERVAL 3 DAYS
+                                END AS clsdate
+                    FROM {{events}} WHERE event_type = 'signup'))"""
 
 
-def transcription_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+@_sql_extractor
+def transcription_events() -> str:
     """Paired from/to location extractor (events.R:116-126 abeyance
     gather; also .parseAbeyanceLocs:164-180): one location-log row
     emits TWO events — TO_X at the check-out date and FROM_X at the
-    check-in date — via ``DataFrame.unpivot`` (tidyr ``gather``).
-    'error' rows stand in for transcription-loc rows; the check-in
-    date is derived as ts + floor(value) minutes.
+    check-in date — via ``UNPIVOT`` (tidyr ``gather``). 'error' rows
+    stand in for transcription-loc rows; the check-in date is derived
+    as ts + floor(value) minutes.
     """
-    e = load_table(spark, sf_dir, "events")
-    base = e.filter(F.col("event_type") == "error").select(
-        F.col("user_id").alias("entity_id"),
-        F.col("value").alias("amount"),
-        F.col("ts").alias("to_transcript"),
-        (
-            F.col("ts")
-            + F.make_interval(mins=F.floor("value").cast("int"))
-        ).alias("from_transcript"),
-    )
-    return _conform(
-        base.unpivot(
-            ids=["entity_id", "amount"],
-            values=["to_transcript", "from_transcript"],
-            variableColumnName="event_type",
-            valueColumnName="ts",
-        )
-    )
+    return """
+        SELECT * FROM (
+          SELECT user_id AS entity_id, value AS amount, ts AS to_transcript,
+                 ts + make_interval(0, 0, 0, 0, 0, CAST(FLOOR(value) AS INT), 0)
+                   AS from_transcript
+          FROM {events} WHERE event_type = 'error'
+        ) UNPIVOT INCLUDE NULLS
+          (ts FOR event_type IN (to_transcript, from_transcript))"""
 
 
-def milestone_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+@_sql_extractor
+def milestone_events() -> str:
     """The reference's workhorse extractor shape: N wide date columns
     gathered into labeled events with a column->label map and a
     non-null filter (event_getDateCols, events.R:22-53; used for
@@ -229,115 +212,80 @@ def milestone_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     does for dispositions): DOCKET always at +7d, SOC at +30d for
     orders over 50k, CERTIFICATION at +60d for finished orders — the
     NULL branches exercise getDateCols' is-not-null drop."""
-    o = load_table(spark, sf_dir, "orders")
-    base = o.filter(F.col("o_orderstatus") != "P").select(
-        F.col("o_custkey").alias("entity_id"),
-        F.col("o_totalprice").alias("amount"),
-        (F.col("o_orderdate") + F.expr("interval 7 days")).alias("DOCKET"),
-        F.when(
-            F.col("o_totalprice") > 50000,
-            F.col("o_orderdate") + F.expr("interval 30 days"),
-        ).alias("SOC"),
-        F.when(
-            F.col("o_orderstatus") == "F",
-            F.col("o_orderdate") + F.expr("interval 60 days"),
-        ).alias("CERTIFICATION"),
-    )
-    return _conform(
-        base.unpivot(
-            ids=["entity_id", "amount"],
-            values=["DOCKET", "SOC", "CERTIFICATION"],
-            variableColumnName="event_type",
-            valueColumnName="ts",
-        )
-    )
+    return """
+        SELECT * FROM (
+          SELECT o_custkey AS entity_id, o_totalprice AS amount,
+                 o_orderdate + INTERVAL 7 DAYS AS DOCKET,
+                 CASE WHEN o_totalprice > 50000
+                      THEN o_orderdate + INTERVAL 30 DAYS END AS SOC,
+                 CASE WHEN o_orderstatus = 'F'
+                      THEN o_orderdate + INTERVAL 60 DAYS END AS CERTIFICATION
+          FROM {orders} WHERE o_orderstatus <> 'P'
+        ) UNPIVOT INCLUDE NULLS
+          (ts FOR event_type IN (DOCKET, SOC, CERTIFICATION))"""
 
 
-def _first_event_mins(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(entity_id, ts) of each user's first raw event. Shared by the
-    creation and substitution extractors so the two branches of the
-    events_all union canonicalize to the SAME aggregate subtree and
-    Spark's ReuseExchange runs the shuffle once. Undated rows are
-    excluded up front (same contract as the window extractors)."""
-    e = load_table(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
-    return e.groupBy(F.col("user_id").alias("entity_id")).agg(
-        F.min("ts").alias("ts")
-    )
+# (entity_id, ts) of each user's first raw event. Shared by the
+# creation and substitution extractors so the two branches of the
+# events_all union canonicalize to the SAME aggregate subtree and
+# Spark's ReuseExchange runs the shuffle once. Undated rows are
+# excluded up front (same contract as the window extractors).
+_FIRST_EVENT_MINS = """
+          SELECT user_id AS entity_id, MIN(ts) AS ts
+          FROM {events} WHERE ts IS NOT NULL GROUP BY user_id"""
 
 
-def creation_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+@_sql_extractor
+def creation_events() -> str:
     """Min-child-timestamp shape (event_vacolsCreation, events.R:
     310-316: ``min(LOCDOUT) per LOCKEY`` subquery joined to the
     parent): a user's first raw event becomes 'account_created'.
     Map-side-combinable min, no join needed for the unfiltered form."""
-    return _conform(
-        _first_event_mins(spark, sf_dir).select(
-            "entity_id",
-            F.lit("account_created").alias("event_type"),
-            "ts",
-            F.lit(None).cast("double").alias("amount"),
-        )
-    )
+    return f"""
+        SELECT entity_id, 'account_created' AS event_type, ts,
+               CAST(NULL AS DOUBLE) AS amount
+        FROM ({_FIRST_EVENT_MINS})"""
 
 
-def substitution_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+@_sql_extractor
+def substitution_events() -> str:
     """The same child-min aggregate gated on a parent flag
     (event_substitution, events.R:331-340: ``BFSUB = 'S'``): users
     whose customer row sits in the BUILDING segment. The flag filter
     is a broadcast semi-join against the filtered parent — pushdown
     keeps the parent scan two columns wide."""
-    c = (
-        load_table(spark, sf_dir, "customer")
-        .filter(F.col("c_mktsegment") == "BUILDING")
-        .select(F.col("c_custkey").alias("entity_id"))
-    )
-    return _conform(
-        _first_event_mins(spark, sf_dir)
-        .join(F.broadcast(c), "entity_id", "left_semi")
-        .select(
-            "entity_id",
-            F.lit("segment_substitution").alias("event_type"),
-            "ts",
-            F.lit(None).cast("double").alias("amount"),
-        )
-    )
+    return f"""
+        SELECT /*+ broadcast(c) */ m.entity_id,
+               'segment_substitution' AS event_type, m.ts,
+               CAST(NULL AS DOUBLE) AS amount
+        FROM ({_FIRST_EVENT_MINS}) m
+        LEFT SEMI JOIN (SELECT c_custkey AS entity_id FROM {{customer}}
+                        WHERE c_mktsegment = 'BUILDING') c
+          ON m.entity_id = c.entity_id"""
 
 
-def ssoc_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+@_sql_extractor
+def ssoc_events() -> str:
     """Gather + uniform relabel + per-(entity, date) dedup
     (event_ssoc, events.R:397-409: five SSOC date columns gathered,
     EVENT_TYPE overwritten to one label, uniqued by BFCORLID+DATE).
     Follow-up statement dates are derived at +90d/+120d tiers; the
     dedup is a single shuffle on (entity_id, ts)."""
-    o = load_table(spark, sf_dir, "orders")
-    base = o.select(
-        F.col("o_custkey").alias("entity_id"),
-        F.when(
-            F.col("o_totalprice") > 100000,
-            F.col("o_orderdate") + F.expr("interval 90 days"),
-        ).alias("ssoc1"),
-        F.when(
-            F.col("o_totalprice") > 150000,
-            F.col("o_orderdate") + F.expr("interval 120 days"),
-        ).alias("ssoc2"),
-    )
-    long = base.unpivot(
-        ids=["entity_id"],
-        values=["ssoc1", "ssoc2"],
-        variableColumnName="_src",
-        valueColumnName="ts",
-    )
-    return _conform(
-        long.select(
-            "entity_id",
-            F.lit("SSOC").alias("event_type"),
-            "ts",
-            F.lit(None).cast("double").alias("amount"),
-        ).dropDuplicates(["entity_id", "ts"])
-    )
+    return """
+        SELECT entity_id, 'SSOC' AS event_type, ts, CAST(NULL AS DOUBLE) AS amount
+        FROM (
+          SELECT DISTINCT entity_id, ts FROM (
+            SELECT o_custkey AS entity_id,
+                   CASE WHEN o_totalprice > 100000
+                        THEN o_orderdate + INTERVAL 90 DAYS END AS ssoc1,
+                   CASE WHEN o_totalprice > 150000
+                        THEN o_orderdate + INTERVAL 120 DAYS END AS ssoc2
+            FROM {orders}
+          ) UNPIVOT INCLUDE NULLS (ts FOR _src IN (ssoc1, ssoc2)))"""
 
 
-def assignment_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+@_sql_extractor
+def assignment_events() -> str:
     """Join-attributed date gather — the reference's DECASS shape
     (events.R:963-971: ``event_getDateCols(con, c("DEASSIGN",
     "DERECEIVE"), c("ASSIGNMENT", "DRAFT_DECISION"), join = "DECASS on
@@ -350,29 +298,21 @@ def assignment_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB this is the fact-fact join of the union — co-partitioned
     sort-merge on the order key (bucket both tables on it and the
     shuffle disappears; see tests/test_bucketing.py)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    j = li.join(o, li["l_orderkey"] == o["o_orderkey"])
-    base = j.select(
-        F.col("o_custkey").alias("entity_id"),
-        F.col("l_extendedprice").alias("amount"),
-        (F.col("l_shipdate") - F.expr("interval 7 days")).alias("ASSIGNMENT"),
-        F.when(
-            F.col("l_quantity") > 25,
-            F.col("l_shipdate") + F.expr("interval 2 days"),
-        ).alias("DRAFT_DECISION"),
-    )
-    return _conform(
-        base.unpivot(
-            ids=["entity_id", "amount"],
-            values=["ASSIGNMENT", "DRAFT_DECISION"],
-            variableColumnName="event_type",
-            valueColumnName="ts",
-        )
-    )
+    return """
+        SELECT * FROM (
+          SELECT o_custkey AS entity_id, l_extendedprice AS amount,
+                 l_shipdate - INTERVAL 7 DAYS AS ASSIGNMENT,
+                 CASE WHEN l_quantity > 25
+                      THEN l_shipdate + INTERVAL 2 DAYS END AS DRAFT_DECISION
+          FROM {lineitem}
+          JOIN (SELECT o_orderkey, o_custkey FROM {orders})
+            ON l_orderkey = o_orderkey
+        ) UNPIVOT INCLUDE NULLS
+          (ts FOR event_type IN (ASSIGNMENT, DRAFT_DECISION))"""
 
 
-def review_window_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+@_sql_extractor
+def review_window_events() -> str:
     """Location-run parser emitting paired TO/FROM events — the
     reference's .parseVSOLocs / .parseQRLocs / .parseOMOLocs shape
     (events.R:127-161, 244-268): segment each entity's history into
@@ -386,31 +326,21 @@ def review_window_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-run aggregation — one shuffle, no second pass. Null-ts rows
     are dropped BEFORE the window (event-log contract: undated rows
     neither emit events nor split runs)."""
-    from pyspark.sql.window import Window
-
-    e = load_table(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    base = e.withColumn("_prev_t", F.lag("event_type").over(w)).withColumn(
-        "_next_t", F.lead("event_type").over(w)
-    )
-    is_view = F.col("event_type") == "view"
-    starts = base.filter(
-        is_view & (F.col("_prev_t").isNull() | (F.col("_prev_t") != "view"))
-    ).select(
-        F.col("user_id").alias("entity_id"),
-        F.lit("to_review").alias("event_type"),
-        F.col("ts"),
-        F.lit(None).cast("double").alias("amount"),
-    )
-    ends = base.filter(
-        is_view & (F.col("_next_t").isNull() | (F.col("_next_t") != "view"))
-    ).select(
-        F.col("user_id").alias("entity_id"),
-        F.lit("from_review").alias("event_type"),
-        F.col("ts"),
-        F.lit(None).cast("double").alias("amount"),
-    )
-    return _conform(starts.unionByName(ends))
+    runs = """
+          SELECT user_id, ts, event_type,
+                 LAG(event_type) OVER w AS _prev_t,
+                 LEAD(event_type) OVER w AS _next_t
+          FROM {events} WHERE ts IS NOT NULL
+          WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)"""
+    return f"""
+        SELECT user_id AS entity_id, 'to_review' AS event_type, ts,
+               CAST(NULL AS DOUBLE) AS amount
+        FROM ({runs})
+        WHERE event_type = 'view' AND (_prev_t IS NULL OR _prev_t <> 'view')
+        UNION ALL
+        SELECT user_id, 'from_review', ts, CAST(NULL AS DOUBLE)
+        FROM ({runs})
+        WHERE event_type = 'view' AND (_next_t IS NULL OR _next_t <> 'view')"""
 
 
 EXTRACTORS = (
@@ -573,7 +503,7 @@ def _clickstream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy shuffles. The substitution gate (customer BUILDING
     segment) joins broadcast before the window.
 
-    The ts-not-null pre-filter is exactly _conform's postcondition
+    The ts-not-null pre-filter is exactly _union_sql's postcondition
     hoisted to the scan (every granular branch drops null-ts rows),
     and it keeps the nulls-first window ordering from electing a
     null-ts row as a user's first event."""
@@ -774,7 +704,7 @@ EVENTS_ALL_SQL = """
 EXCLUDED_ENTITIES = (13, 77)
 
 _EXCL = ", ".join(str(e) for e in EXCLUDED_ENTITIES)
-# ts IS NOT NULL is part of events_all's contract (_conform drops
+# ts IS NOT NULL is part of events_all's contract (_union_sql drops
 # null-ts rows in every extractor), so the shared SQL twin must apply
 # it too — otherwise a consumer that forgets its own ts filter
 # silently diverges for branches whose gathered date can be NULL.
@@ -784,28 +714,31 @@ EVENTS_ALL_SQL = f"""
 """
 
 
-def events_all(
-    spark: SparkSession, sf_dir: str, where: Column | None = None
-) -> DataFrame:
+def events_all(spark: SparkSession, sf_dir: str, where: str | None = None) -> DataFrame:
     """Union of all extractors — one Catalyst plan, one pass.
 
     ``where`` mirrors the reference's ``event_all(con, join, where)``
-    composability hook (events.R:923-991): an optional predicate pushed
-    over the unified log (Catalyst pushes it into every union branch,
-    so a selective predicate prunes each source scan). The global
+    composability hook (events.R:923-991): an optional SQL predicate
+    over the unified log. Catalyst pushes it into every union branch,
+    so a selective predicate prunes each source scan. The global
     dummy-entity exclusions (constants.R:1-7) are always applied.
 
     Physical strategy: with a caller ``where`` the granular
-    per-extractor union is used — Catalyst pushes the predicate into
-    every branch, so a selective filter prunes each scan (u5's
-    documented behavior). Without one, the full log is being
-    materialized anyway, and the fused per-table form (6 scans, not
-    15) wins; an event_type/ts predicate cannot be pushed below a
-    generate, but an entity_id one still reaches the fused scans
-    (entity_id passes through the explode untouched).
+    per-extractor union is used, as one SQL statement — Catalyst
+    pushes the predicate into every branch, so a selective filter
+    prunes each scan (u5's documented behavior). Without one, the
+    full log is being materialized anyway, and the fused per-table
+    form (6 scans, not 15) wins; an event_type/ts predicate cannot be
+    pushed below a generate, but an entity_id one still reaches the
+    fused scans (entity_id passes through the explode untouched).
+    Every branch of either form has the canonical schema, so they
+    union by position.
     """
-    extractors = EXTRACTORS if where is not None else FUSED_EXTRACTORS
-    ev = reduce(
-        DataFrame.unionByName, (ex(spark, sf_dir) for ex in extractors)
-    ).filter(~F.col("entity_id").isin(*EXCLUDED_ENTITIES))
-    return ev.filter(where) if where is not None else ev
+    excl = f"entity_id NOT IN ({_EXCL})"
+    if where is None:
+        return reduce(
+            DataFrame.union, (ex(spark, sf_dir) for ex in FUSED_EXTRACTORS)
+        ).where(excl)
+    return _union_sql(
+        spark, sf_dir, [ex.sql for ex in EXTRACTORS], f"{excl} AND ({where})"
+    )

@@ -87,7 +87,7 @@ def test_event_where_hook_matches_oracle(spark, ddb, label, pred):
 
     from appeals_data_spark.views.events import EVENTS_ALL_SQL, events_all
 
-    ev = events_all(spark, SF_SMOKE, where=F.expr(pred)).groupBy(
+    ev = events_all(spark, SF_SMOKE, where=pred).groupBy(
         "event_type"
     ).agg(
         F.count("*").alias("n"),

@@ -12,7 +12,11 @@ catalog memo. Each side is warmed once, then every pair times one
 ``bench.timed_run`` per side and query, the side that runs first
 alternating between pairs, each side under its own ``session.tune``
 confs. Both sides' rows must be equal on every pair. Query timings are
-judged with the bound of BENCHMARK.json's ``query_p50_s``.
+judged with the bound of BENCHMARK.json's ``query_p50_s``. The one
+session is built once, so a static conf (one set on the builder in
+``session.get_spark``, such as
+``spark.python.sql.dataFrameDebugging.enabled``) is the same on both
+sides: A/B such a conf with ``--workload``.
 
 Workload mode alternates BENCHMARK.json's command (``appbench/run.py``)
 between the two checkouts, with seed = pair number and the benchmark's
