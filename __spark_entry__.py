@@ -45,6 +45,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     ``spark.catalog.clearCache()`` between queries, as ``bench.py``,
     ``tools/ab.py`` and ``appbench`` do; otherwise the blocks pile up in
     storage memory.
+
+    Such a caller should also build its session with
+    ``spark.sql.codegen.cache.maxEntries`` at least 4096 (a static conf,
+    as ``session.get_spark`` sets it). At Spark's 100-entry default the
+    registry's generated classes, 2,817 on one sweep, evict each other,
+    and every warm query compiles its code again.
     """
     return {name: q.builder for name, q in all_queries().items()}
 

@@ -17,6 +17,9 @@ Scale notes (100 TB design):
 
 from __future__ import annotations
 
+import weakref
+
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -51,9 +54,24 @@ _TS_COLS = {
 # that dominates small-query latency when a session runs many queries).
 _READ_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 
+_APP_IDS: weakref.WeakKeyDictionary[SparkContext, str] = weakref.WeakKeyDictionary()
+
+
+def app_id(spark: SparkSession) -> str:
+    """The session's ``applicationId``, read over Py4J once per Python
+    ``SparkContext`` object. ``sc.applicationId`` costs two round trips
+    (``sc()``, ``applicationId()``) per read, which a memo hit would
+    otherwise pay on every call. A context that replaces a stopped one
+    is a new object, so its id is read afresh."""
+    sc = spark.sparkContext
+    app = _APP_IDS.get(sc)
+    if app is None:
+        app = _APP_IDS[sc] = sc.applicationId
+    return app
+
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, name)
+    key = (app_id(spark), sf_dir, name)
     cached = _READ_CACHE.get(key)
     if cached is not None:
         return cached
@@ -247,7 +265,7 @@ def scratch_path_once(spark: SparkSession, sf_dir: str, name: str, writer) -> st
     import os
     import tempfile
 
-    app = spark.sparkContext.applicationId
+    app = app_id(spark)
     key = (app, sf_dir, name)
     path = _MATERIALIZED.get(key)
     if path is None:

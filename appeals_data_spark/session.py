@@ -61,6 +61,20 @@ RUNTIME_CONFS = {
     "spark.sql.execution.arrow.pyspark.enabled": "true",
 }
 
+# Generated classes Spark's code-generation cache keeps per JVM
+# (``spark.sql.codegen.cache.maxEntries``, a static conf, default 100).
+# A miss compiles the whole-stage or expression class again with
+# Janino. Measured working set (4 cores, one JVM, this bound): a cold
+# sweep of all 205 registered queries at sf0.001 compiles 2,817
+# distinct classes, one pass of the 24 appbench builders on
+# appbench/base about 460. At the default every warm query recompiles
+# what the queries before it evicted (a warm appbench pass compiled
+# 97% of its cold pass's classes again). 4096 holds the whole registry
+# with headroom; 0 would disable the cache. A session built elsewhere
+# (the external driver's, ``tools/check.py --vanilla``) keeps Spark's
+# default unless it sets this conf at build time.
+CODEGEN_CACHE_ENTRIES = 4096
+
 
 def tune(spark: SparkSession) -> SparkSession:
     """Apply runtime confs to an existing session (driver-provided).
@@ -71,10 +85,14 @@ def tune(spark: SparkSession) -> SparkSession:
     time it touches the catalog. A static key added there would do
     nothing on that session: ``spark.conf.set`` raises for it and the
     error is swallowed below. Static confs go on the builder in
-    ``get_spark``. Shuffle partitions are sized to the session's
-    actual core count — a vanilla session would otherwise run every
-    shuffle at the 200-partition default, which at local scale is
-    pure scheduling overhead per query.
+    ``get_spark``, and a session built elsewhere keeps their Spark
+    defaults. Among them is the 100-entry generated-class cache (see
+    CODEGEN_CACHE_ENTRIES): unless that session set
+    ``spark.sql.codegen.cache.maxEntries`` when it was built, its warm
+    queries compile their generated code again. Shuffle partitions are
+    sized to the session's actual core count — a vanilla session would
+    otherwise run every shuffle at the 200-partition default, which at
+    local scale is pure scheduling overhead per query.
     """
     confs = dict(RUNTIME_CONFS)
     try:
@@ -118,6 +136,8 @@ def get_spark(
         # in RUNTIME_CONFS. Set it to "true" locally to get the
         # file:line DataFrameQueryContext back in builder errors.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # Static too: see CODEGEN_CACHE_ENTRIES.
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)

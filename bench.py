@@ -5,8 +5,9 @@ secondary suite at one scale, two runs per query, and prints ONE final
 JSON line:
   {"metric": "headline_suite_seconds", "value": <total sec>, "unit": "sec",
    "queries": {name: sec, ...}, "secondary": {...}, "sf": <scale factor>}
-The full record, with per-query build seconds, goes to an earlier
-``BENCH_DETAIL`` line and to ``bench_detail.json``.
+The full record, with per-query build seconds and generated-class
+compile counts, goes to an earlier ``BENCH_DETAIL`` line and to
+``bench_detail.json``.
 
 ``warm``, ``timed_run`` and ``cpu_sample`` are the timing primitives
 ``tools/ab.py`` shares.
@@ -126,10 +127,11 @@ def env_sample(before, after):
 
 def warm(spark, queries, sf_dir):
     """Run each query once on ``sf_dir``, untimed, after one parquet read
-    and one mapInPandas pass. Codegen compiles once per expression tree
-    and JVM, and the Arrow worker pool starts once; without this the
-    first timed run of a query bills seconds of that to itself. Drops
-    the blocks the queries persisted."""
+    and one mapInPandas pass. Codegen compiles each generated class
+    once per JVM while it stays in the generated-class cache (sized by
+    ``session.CODEGEN_CACHE_ENTRIES``), and the Arrow worker pool starts
+    once; without this the first timed run of a query bills seconds of
+    that to itself. Drops the blocks the queries persisted."""
     spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
     spark.range(64).repartition(8).mapInPandas(lambda b: b, schema="id long").count()
     for q in queries:
@@ -140,33 +142,47 @@ def warm(spark, queries, sf_dir):
     spark.catalog.clearCache()
 
 
+def compile_count(spark) -> int:
+    """Classes Spark's code generator has compiled in this JVM so far
+    (``CodegenMetrics``); a generated-class cache hit compiles nothing
+    and is not counted."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
 def timed_run(spark, q, sf_dir):
-    """Build and collect one query: (build seconds, total seconds, rows).
+    """Build and collect one query: (build seconds, total seconds, rows,
+    compiles).
 
     Build is the builder call: catalog reads, planning and any eager job
-    inside the builder. Total adds the collect. The blocks the query
-    persisted are dropped after the clock stops, so every run starts
-    from the same storage state."""
+    inside the builder. Total adds the collect. Compiles counts the
+    generated classes the run compiled, read outside the clock. The
+    blocks the query persisted are dropped after the clock stops, so
+    every run starts from the same storage state."""
+    c0 = compile_count(spark)
     t0 = time.perf_counter()
     df = q.builder(spark, sf_dir)
     t1 = time.perf_counter()
     rows = df.collect()
     t2 = time.perf_counter()
+    compiles = compile_count(spark) - c0
     spark.catalog.clearCache()
-    return t1 - t0, t2 - t0, rows
+    return t1 - t0, t2 - t0, rows, compiles
 
 
 def _time_suite(spark, qs, sf_dir):
     """Two timed runs per query: per-query minimum total, first-run
-    total and minimum build seconds. The minimum is the steady-state
-    figure: one run on a shared JVM can catch a multi-second GC stall."""
-    best, first, build = {}, {}, {}
+    total, minimum build seconds and (first-run, minimum) compiles. The
+    minimum is the steady-state figure: one run on a shared JVM can
+    catch a multi-second GC stall."""
+    best, first, build, compiles = {}, {}, {}, {}
     for name, q in sorted(qs.items()):
-        runs = [timed_run(spark, q, sf_dir)[:2] for _ in range(2)]
+        runs = [timed_run(spark, q, sf_dir) for _ in range(2)]
         first[name] = round(runs[0][1], 3)
         best[name] = round(min(r[1] for r in runs), 3)
         build[name] = round(min(r[0] for r in runs), 3)
-    return best, first, build
+        compiles[name] = [runs[0][3], min(r[3] for r in runs)]
+    return best, first, build, compiles
 
 
 def main() -> None:
@@ -195,17 +211,18 @@ def main() -> None:
     # and every attempt's window is recorded, so a reader can
     # adjudicate without re-measuring.
     stat0 = cpu_sample()
-    timings, firsts, builds = _time_suite(spark, qs, sf_dir)
+    timings, firsts, builds, compiles = _time_suite(spark, qs, sf_dir)
     stat_mid = cpu_sample()
     attempts = [{"value": round(sum(timings.values()), 3), **env_sample(stat0, stat_mid)}]
     if attempts[0]["steal_pct"] is not None and attempts[0]["steal_pct"] > HEADLINE_STEAL_MAX:
         stat_r0 = cpu_sample()
-        timings2, _, builds2 = _time_suite(spark, qs, sf_dir)
+        timings2, _, builds2, compiles2 = _time_suite(spark, qs, sf_dir)
         stat_mid = cpu_sample()
         attempts.append({"value": round(sum(timings2.values()), 3), **env_sample(stat_r0, stat_mid)})
         timings = {n: min(timings[n], timings2[n]) for n in timings}
         builds = {n: min(builds[n], builds2[n]) for n in builds}
-    sec_timings, sec_firsts, sec_builds = _time_suite(spark, sec_qs, sf_dir)
+        compiles = {n: [compiles[n][0], min(compiles[n][1], compiles2[n][1])] for n in compiles}
+    sec_timings, sec_firsts, sec_builds, sec_compiles = _time_suite(spark, sec_qs, sf_dir)
     stat1 = cpu_sample()
     try:
         load_avg = round(os.getloadavg()[0], 2)
@@ -236,6 +253,7 @@ def main() -> None:
         "first_run_value": round(sum(firsts.values()), 3),
         "first_run_queries": firsts,
         "build_s": builds,
+        "compiles": compiles,
         "secondary": {
             "value": round(sum(sec_timings.values()), 3),
             "steal_pct": env_sec["steal_pct"],
@@ -244,6 +262,7 @@ def main() -> None:
             "first_run_value": round(sum(sec_firsts.values()), 3),
             "first_run_queries": sec_firsts,
             "build_s": sec_builds,
+            "compiles": sec_compiles,
         },
         "sf": sf,
     }
@@ -252,7 +271,9 @@ def main() -> None:
     print("BENCH_DETAIL " + json.dumps(detail))
     # The final line stays under 1.5 KB so a ~2.2 KB tail capture of the
     # output keeps it whole; the per-query detail is above and on disk.
-    compact = {k: v for k, v in detail.items() if k not in ("first_run_queries", "build_s")}
+    compact = {
+        k: v for k, v in detail.items() if k not in ("first_run_queries", "build_s", "compiles")
+    }
     compact["secondary"] = {
         k: detail["secondary"][k] for k in ("value", "first_run_value", "steal_pct", "ctxt_per_s")
     }

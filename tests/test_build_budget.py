@@ -21,6 +21,7 @@ from pathlib import Path
 import py4j.clientserver
 import pytest
 
+from appeals_data_spark.catalog import app_id, load_table
 from appeals_data_spark.registry import all_queries
 
 REPO = Path(__file__).resolve().parents[1]
@@ -38,30 +39,30 @@ BUILDERS = _workloads.APPEALS_REPORTS + _workloads.CORPUS_CURATION
 # the budget consciously in the same change. A builder that got
 # cheaper can lower its budget.
 PY4J_BUDGET = {
-    "a1_pricing_summary": 147,
-    "j8_argmax_latest_order": 87,
-    "p4_range_in_between": 91,
-    "w11_rolling_mean": 103,
-    "r2_pivot_event_matrix": 40,
-    "u5_event_where_hook": 68,
-    "x4_transition_matrix": 151,
-    "comp_docket_projection": 178,
-    "surv_km_counts": 177,
-    "surv_cuminc": 305,
-    "x3_linreg_closed_form": 129,
-    "x6_logistic_glmm": 443,
-    "x3_linear_svm_eval": 378,
-    "pref_bradley_terry": 340,
-    "closure_components": 228,
-    "graph_pagerank_handoff": 190,
-    "dedup_minhash_portable": 1468,
-    "dedup_embedding_cosine": 338,
-    "mm_decode_image": 175,
-    "text_bpe_vocab": 1334,
-    "dedup_incremental_delta": 394,
-    "text_unigram_logprob": 239,
-    "vec_brute_force_topk": 165,
-    "pipe_source_caps": 124,
+    "a1_pricing_summary": 145,
+    "j8_argmax_latest_order": 83,
+    "p4_range_in_between": 89,
+    "w11_rolling_mean": 101,
+    "r2_pivot_event_matrix": 38,
+    "u5_event_where_hook": 60,
+    "x4_transition_matrix": 149,
+    "comp_docket_projection": 176,
+    "surv_km_counts": 175,
+    "surv_cuminc": 303,
+    "x3_linreg_closed_form": 127,
+    "x6_logistic_glmm": 439,
+    "x3_linear_svm_eval": 376,
+    "pref_bradley_terry": 338,
+    "closure_components": 226,
+    "graph_pagerank_handoff": 188,
+    "dedup_minhash_portable": 1466,
+    "dedup_embedding_cosine": 336,
+    "mm_decode_image": 173,
+    "text_bpe_vocab": 1332,
+    "dedup_incremental_delta": 392,
+    "text_unigram_logprob": 237,
+    "vec_brute_force_topk": 163,
+    "pipe_source_caps": 122,
 }
 
 
@@ -110,3 +111,27 @@ def test_py4j_commands_within_budget(counts):
         n: (PY4J_BUDGET[n], c[0]) for n, c in counts.items() if c[0] > PY4J_BUDGET[n]
     }
     assert not over, f"(budget, actual) Py4J commands per build: {over}"
+
+
+def test_catalog_memo_hit_sends_no_commands(spark):
+    def load(s, sf_dir):
+        return load_table(s, sf_dir, "orders")
+
+    load(spark, BASE)
+    assert _count_commands(spark, load) == 0
+
+
+def test_app_id_is_read_per_context_object():
+    class Context:
+        def __init__(self, app):
+            self.applicationId = app
+
+    class Session:
+        def __init__(self, sc):
+            self.sparkContext = sc
+
+    first = Session(Context("app-1"))
+    assert app_id(first) == "app-1"
+    first.sparkContext.applicationId = "changed"  # memoized: not read again
+    assert app_id(first) == "app-1"
+    assert app_id(Session(Context("app-2"))) == "app-2"

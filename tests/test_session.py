@@ -9,7 +9,7 @@ nothing on that session. Static confs belong on the builder in
 
 from __future__ import annotations
 
-from appeals_data_spark.session import RUNTIME_CONFS
+from appeals_data_spark.session import CODEGEN_CACHE_ENTRIES, RUNTIME_CONFS
 
 
 def test_every_runtime_conf_is_runtime_settable(spark):
@@ -20,3 +20,8 @@ def test_every_runtime_conf_is_runtime_settable(spark):
 def test_call_site_capture_is_off(spark):
     key = "spark.python.sql.dataFrameDebugging.enabled"
     assert spark.conf.get(key) == "false"
+
+
+def test_generated_class_cache_holds_the_working_set(spark):
+    key = "spark.sql.codegen.cache.maxEntries"
+    assert spark.conf.get(key) == str(CODEGEN_CACHE_ENTRIES)

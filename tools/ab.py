@@ -129,7 +129,7 @@ def _queries(a, wt, spec):
             rows = {}
             for side in order:
                 tune(side)
-                _, total, rows[side] = bench.timed_run(spark, sides[side][1][j], a.sf)
+                _, total, rows[side], _ = bench.timed_run(spark, sides[side][1][j], a.sf)
                 times[name][side == "change"].append(total)
             if sorted(map(repr, rows["base"])) != sorted(map(repr, rows["change"])):
                 print(f"pair {i + 1}: {name} rows differ", flush=True)
