@@ -206,16 +206,6 @@ def sized_for_expansion(df: DataFrame, expansion: float) -> DataFrame:
     return df.repartition(target) if input_split_count(df) < target else df
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str, prefix: str = "") -> None:
-    """Register every table as a temp view (``spark.sql`` surface)."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(f"{prefix}{name}")
-
-
 def write_partitioned(
     df: DataFrame,
     path: str,

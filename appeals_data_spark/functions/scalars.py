@@ -56,7 +56,6 @@ def charge() -> Column:
 
 # SQL fragments for the DuckDB oracle mirroring the helpers above.
 SQL_DSUM = "CAST(SUM(CAST({col} AS DECIMAL(18,2))) AS DOUBLE)"
-SQL_DAVG = "CAST(SUM(CAST({col} AS DECIMAL(18,2))) AS DOUBLE) / COUNT({col})"
 SQL_DISC_PRICE = (
     "CAST(l_extendedprice AS DECIMAL(18,2))"
     " * (CAST(1 AS DECIMAL(4,2)) - CAST(l_discount AS DECIMAL(4,2)))"
@@ -66,22 +65,14 @@ SQL_CHARGE = SQL_DISC_PRICE + " * (CAST(1 AS DECIMAL(4,2)) + CAST(l_tax AS DECIM
 
 # -- R-compatible conditionals ------------------------------------------------
 
-
-def r_ifelse(cond: Column, yes, no) -> Column:
-    """R ``ifelse`` semantics: NULL condition -> NULL result.
-
-    Spark's ``when(cond, yes).otherwise(no)`` sends a NULL condition to
-    the ``otherwise`` branch; R's ``ifelse`` propagates NA. The
-    reference relies on that NA propagation when deriving event labels
-    from nullable columns (e.g. ``ifelse(HEARING_DISP == "H", ...)``
-    with NULL dispositions, events.R:540-549) — labels for unknown
-    dispositions must stay unknown, not default to the else-label.
-    Expressed as two ``when`` arms with no ``otherwise`` so the NULL
-    case falls through to NULL inside codegen.
-    """
-    return F.when(cond, yes).when(~cond, no)
-
-
+# R ``ifelse`` semantics: NULL condition -> NULL result. Spark's
+# ``CASE WHEN cond THEN yes ELSE no END`` (and ``when().otherwise()``)
+# sends a NULL condition to the else branch; R's ``ifelse`` propagates
+# NA. The reference relies on that NA propagation when deriving event
+# labels from nullable columns (e.g. ``ifelse(HEARING_DISP == "H", ...)``
+# with NULL dispositions, events.R:540-549) — labels for unknown
+# dispositions must stay unknown, not default to the else-label. Two
+# WHEN arms and no ELSE, so the NULL case falls through to NULL.
 SQL_R_IFELSE = "CASE WHEN {cond} THEN {yes} WHEN NOT ({cond}) THEN {no} END"
 
 
@@ -102,10 +93,6 @@ def month_trunc(col: str | Column) -> Column:
     identically against the DuckDB oracle."""
     c = F.col(col) if isinstance(col, str) else col
     return F.date_trunc("month", c).cast("date")
-
-
-SQL_FISCAL_YEAR = "YEAR(CAST({col} AS TIMESTAMP) + INTERVAL 3 MONTH)"
-SQL_MONTH_TRUNC = "CAST(DATE_TRUNC('month', {col}) AS DATE)"
 
 
 # -- cross-engine deterministic rounding --------------------------------------

@@ -239,13 +239,6 @@ def _ngram_arrow(df, text_col, k, carry_cols, names, distinct, count_col):
     return src.mapInPandas(gen, schema=out_schema)
 
 
-def rolling_fingerprint(col: str | Column) -> Column:
-    """Deterministic 64-bit document fingerprint: xxhash64 of the
-    normalized (lowercased, whitespace-collapsed) text."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.xxhash64(F.regexp_replace(F.lower(F.trim(c)), r"\s+", " "))
-
-
 def winnow_fingerprints(
     df, text_col: str, id_col: str, k: int = 5, w: int = 4
 ):
@@ -420,8 +413,8 @@ def cdc_chunks(df, text_col: str, id_col: str, w: int = 8, div: int = 64):
     t = F.regexp_replace(F.lower(F.trim(c)), r"\s+", " ")
     # localCheckpoint: normalized text + char-code array feed BOTH the
     # position-explode branch and the spans join — unchecked, the scan
-    # + regexp + split ran once per branch (round-9 code review; the
-    # cross-source sibling had the same shape one level up)
+    # + regexp + split ran once per branch (the cross-source sibling
+    # had the same shape one level up)
     base = df.select(
         F.col(id_col).alias("doc_id"),
         t.alias("_t"),
@@ -573,76 +566,6 @@ def cdc_chunk_stream(df, text_col: str, id_col: str, carry_cols=(),
                 yield res
 
     return df.select(*sel, text_col).mapInPandas(gen, schema=out_schema)
-
-
-def cdc_chunks_stateless(df, text_col: str, id_col: str, w: int = 8, div: int = 64):
-    """Row-local twin of ``cdc_chunks`` for STREAMING ingest: no
-    groupBy, no window — cut positions are derived inside the row with
-    higher-order functions, then chunks explode out, so the projection
-    is append-mode stream-safe (the scrub_counts/mm-hash discipline;
-    parity gate in tests/test_streaming.py, value-equality gate in
-    tests/test_cdc_mmr_mips.py).
-
-    HOF hygiene (the winnowing lesson): every lambda references only
-    its own element — per-position hashes come from ``arrays_zip`` of
-    w shifted slices (arguments evaluated once per row), positions are
-    zipped in as data, and the chunk substring runs AFTER the explode
-    at row level. The exploded batch form stays the hot path for
-    frozen-corpus passes (codegen'd hash, one explode); this form is
-    the ingest path where per-doc cost is bounded by arrival rate."""
-    from ..operators.dedup import portable_hash48
-
-    c = F.col(text_col) if isinstance(text_col, str) else text_col
-    t = F.regexp_replace(F.lower(F.trim(c)), r"\s+", " ")
-    base = df.select(
-        F.col(id_col).alias("doc_id"),
-        t.alias("_t"),
-        F.transform(F.split(t, ""), F.ascii).alias("_c"),
-    ).filter(F.length("_t") >= 1)
-    n = F.length("_t")
-    cnt = F.greatest(n - (w - 1), F.lit(0))
-    z = F.arrays_zip(*[F.slice("_c", j + 1, cnt) for j in range(w)])
-    hs = F.transform(
-        z,
-        lambda s: sum(
-            s[str(j)].cast("long") * F.lit(31**j).cast("long") for j in range(w)
-        ),
-    )
-    # sequence(1, 0) throws (short docs with 1 <= n < w have cnt=0 and
-    # must yield ZERO cuts -> one whole-doc chunk, like the batch twin)
-    positions = F.when(
-        cnt >= 1, F.sequence(F.lit(1), cnt, F.lit(1))
-    ).otherwise(F.array().cast("array<int>"))
-    pairs = F.arrays_zip(hs, positions)  # fields "0" (hash), "1" (pos p)
-    # capturing n (= length(_t)) in the lambda re-evaluates a stored
-    # length per element — O(1), unlike capturing the split array
-    cuts = F.transform(
-        F.filter(
-            pairs,
-            lambda x: (x["0"] % div == 0) & (x["1"] + (w - 1) < n),
-        ),
-        lambda x: (x["1"] + (w - 1)).cast("long"),
-    )
-    spans = base.select(
-        "doc_id",
-        "_t",
-        F.explode(
-            F.arrays_zip(
-                F.concat(F.array(F.lit(0).cast("long")), cuts),
-                F.concat(cuts, F.array(n.cast("long"))),
-            )
-        ).alias("z"),
-    ).select(
-        "doc_id",
-        F.col("z.0").alias("s"),
-        F.col("z.1").alias("e"),
-        "_t",
-    ).filter(F.col("e") > F.col("s"))
-    return spans.select(
-        "doc_id",
-        (F.col("e") - F.col("s")).alias("chunk_len"),
-        portable_hash48(F.expr("substring(_t, s + 1, e - s)"), "cdc").alias("h"),
-    )
 
 
 def lang_id_heuristic(col: str | Column) -> Column:

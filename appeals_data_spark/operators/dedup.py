@@ -50,9 +50,6 @@ def exact_dedup_groups(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
 # -- minhash ----------------------------------------------------------------
 
 
-_LONG_MAX = 9223372036854775807
-
-
 def portable_hash48(col: str | Column, salt) -> Column:
     """48-bit hash with an EXACT DuckDB twin: BIGINT value of the first
     12 hex chars of md5(s || '#' || salt).
@@ -83,73 +80,6 @@ def sql_portable_hash48(expr: str, salt: str) -> str:
         f"(strpos('0123456789abcdef', substr(md5({expr} || '#' || '{salt}'), "
         "i+1, 1)) - 1) * (16.0 ** (11 - i)))) AS BIGINT)"
     )
-
-
-def _minhash_fold(col: str | Column, num_hashes: int, k_shingle: int, finish) -> Column:
-    """One-pass minhash: fold the shingle array (evaluated once — it is
-    an *argument* of ``aggregate``, not captured inside a lambda, which
-    would re-evaluate the whole tokenize+shingle tree per element) into
-    an element-wise-min signature of ``num_hashes`` seeds, then apply
-    ``finish`` to the signature array.
-
-    Seed family: xxhash64(shingle, i) — identical values to hashing
-    each seed in its own pass, so golden fixtures are stable under this
-    loop interchange. NB the production :func:`minhash_features` path
-    uses the faster rehash family xxhash64(xxhash64(shingle), i); the
-    two produce different (but equally valid) signatures — this HOF
-    form is kept as the didactic single-expression reference.
-    """
-    sh = shingles(col, k_shingle)
-    sh = F.when(F.size(sh) > 0, sh).otherwise(F.array(F.lit("")))
-    seeds = F.sequence(F.lit(0), F.lit(num_hashes - 1))
-    init = F.array_repeat(F.lit(_LONG_MAX).cast("long"), num_hashes)
-    return F.aggregate(
-        sh,
-        init,
-        lambda acc, s: F.zip_with(
-            acc, F.transform(seeds, lambda i: F.xxhash64(s, i)), lambda x, y: F.least(x, y)
-        ),
-        finish,
-    )
-
-
-def minhash_signature(col: str | Column, num_hashes: int = 32, k_shingle: int = 3) -> Column:
-    """Array of ``num_hashes`` minhash values over word k-shingles.
-
-    Each hash family member is xxhash64(shingle, seed=i); min per seed.
-    Empty shingle sets get a sentinel signature (hash of '') so they
-    never collide with real content.
-    """
-    return _minhash_fold(col, num_hashes, k_shingle, lambda acc: acc)
-
-
-def minhash_band_hashes(
-    col: str | Column, num_hashes: int = 32, bands: int = 8, k_shingle: int = 3
-) -> Column:
-    """Array of ``bands`` structs (band, band_hash) computed in the same
-    single pass as the signature (band hashing happens in the fold's
-    ``finish`` lambda, where the signature is a bound value, not a
-    re-evaluated expression)."""
-    rows_per_band = num_hashes // bands
-
-    def _finish(acc: Column) -> Column:
-        return F.transform(
-            F.sequence(F.lit(0), F.lit(bands - 1)),
-            lambda b: F.struct(
-                b.alias("band"),
-                F.xxhash64(
-                    F.concat_ws(
-                        ",",
-                        F.transform(
-                            F.slice(acc, b * rows_per_band + 1, rows_per_band),
-                            lambda x: x.cast("string"),
-                        ),
-                    )
-                ).alias("band_hash"),
-            ),
-        )
-
-    return _minhash_fold(col, num_hashes, k_shingle, _finish)
 
 
 def minhash_features(

@@ -241,10 +241,10 @@ def label_centroids(
 def centroid_struct_array(centroids: DataFrame) -> DataFrame:
     """Collapse a (c_label, cvec) centroid table into ONE row holding a
     label-sorted array<struct<c_label,cvec>> — the broadcastable model
-    artifact the expression-level assigners fold over. Label types are
-    preserved (unlike streaming.vec_stream.centroid_array's int cast)
-    so downstream schemas are unchanged for long-labeled centroid sets
-    (e.g. vec_kmeans_lloyd's vec_id-seeded cells)."""
+    artifact the expression-level assigners and the streaming scorer
+    fold over. Label types are preserved, so downstream schemas are
+    unchanged for long-labeled centroid sets (e.g. vec_kmeans_lloyd's
+    vec_id-seeded cells); a caller that wants int labels casts first."""
     return centroids.agg(
         F.array_sort(F.collect_list(F.struct("c_label", "cvec"))).alias(
             "_cents"
@@ -256,10 +256,10 @@ def nearest_centroid_best(cents: Column, vec: Column, label_type: str) -> Column
     """Per-row argmax over a centroid struct array: fold keeping the
     (c_label, c_cos) with the highest cosine; strict > keeps the FIRST
     (lowest label, array is label-sorted) on exact ties — identical to
-    the (cos DESC, c_label ASC) window rank the r1-r6 assigners used,
-    term for term, so every downstream oracle hash is unchanged. The
-    batch twin of streaming.vec_stream.nearest_centroid_struct, made
-    label-type generic (init is a typed NULL: any real cosine beats
+    the (cos DESC, c_label ASC) window rank of the oracles, term for
+    term, so every downstream oracle hash is unchanged. Shared by the
+    batch assigners and streaming.vec_stream.scored_stream. The label
+    type is the caller's (init is a typed NULL: any real cosine beats
     -inf, so it never survives a non-empty centroid set)."""
     init = F.struct(
         F.lit(None).cast(label_type).alias("c_label"),
@@ -312,18 +312,17 @@ def assign_to_centroids(
     (rank_max=nprobe): (id, c_label, c_rank) — the IVF build/probe
     primitive.
 
-    Zero-shuffle shape (round 7): the corpus pass is narrow end-to-end
-    — the r1-r6 crossJoin + Window.partitionBy(id) version shuffled the
-    FULL corpus (|corpus| x |cells| rows through one exchange) just to
-    rank within each vector's own candidate list; at 100 TB that
-    exchange was the dominant cost of every IVF build.
+    Zero-shuffle shape: the corpus pass is narrow end-to-end — a
+    crossJoin + Window.partitionBy(id) form shuffles the FULL corpus
+    (|corpus| x |cells| rows through one exchange) just to rank within
+    each vector's own candidate list; at 100 TB that exchange would be
+    the dominant cost of every IVF build.
 
-    Round 10 moved the per-row argmax/top-k from the expression-level
-    HOF fold (``nearest_centroid_best`` / ``_topk_centroid_structs`` —
-    kept as the reference implementations and for the streaming twin)
-    to an Arrow ``mapInPandas`` scorer with the IDENTICAL arithmetic
-    order: the centroid table (broadcast-small by contract — this
-    function previously collapsed it to ONE row) is collected
+    The per-row argmax/top-k runs in an Arrow ``mapInPandas`` scorer,
+    not in the expression-level HOF fold (``nearest_centroid_best`` /
+    ``_topk_centroid_structs``, kept as the reference implementations
+    and for the streaming scorer), with the IDENTICAL arithmetic
+    order: the centroid table (broadcast-small by contract) is collected
     label-sorted to the driver, each Arrow batch computes every
     (row, centroid) cosine by dimension-major float64 accumulation
     (the HOF fold's exact order — see functions.vectors), rank 1 is a
@@ -584,8 +583,8 @@ def pq_encode_hof(
     broadcast-join the codebooks, ROUND(l2sq, dp), (d, code)
     struct-min argmin. Spark does not codegen HOF lambdas, so the
     |corpus|·m·|codes| interpreted l2sq folds made this the vec
-    family's dominant remaining constant at 100× (round-10 verdict:
-    adc 23.8s vs ivf 4.65s)."""
+    family's dominant remaining constant at 100× (adc 23.8s vs ivf
+    4.65s)."""
     from ..functions.vectors import l2sq
 
     blocks = _block_slices(corpus, id_col, m, sub, id_col, vec_col)
@@ -599,8 +598,8 @@ def pq_encode_hof(
     # old (d ASC, code ASC) row_number()=1 winner, but as a map-side-
     # combinable aggregate — the |corpus|·m·|codes| candidate stream
     # collapses to |corpus|·m rows BEFORE the exchange instead of
-    # sort-shuffling in full for a window (round 10; values identical,
-    # oracle hashes unchanged).
+    # sort-shuffling in full for a window (values identical, oracle
+    # hashes unchanged).
     return (
         scored.groupBy(id_col, "block")
         .agg(F.min(F.struct("d", "code")).alias("_s"))
@@ -624,9 +623,9 @@ def pq_encode(
     instead of 4·dim bytes, built in ONE narrow pass over the corpus
     (no join, no shuffle) against the broadcast-small codebook.
 
-    Round 11 moved the hot path from the interpreted HOF fold
-    (``pq_encode_hof``, kept as the reference implementation) to an
-    Arrow ``mapInPandas`` encoder — the assign_to_centroids recipe:
+    The hot path is an Arrow ``mapInPandas`` encoder, not the
+    interpreted HOF fold (``pq_encode_hof``, kept as the reference
+    implementation) — the assign_to_centroids recipe:
 
     * the codebook (m·|codes| rows — model-sized by construction) is
       collected code-sorted to the driver;
@@ -646,7 +645,7 @@ def pq_encode(
 
     Bit-equality vs pq_encode_hof is differential-gated in
     tests/test_ann_recall.py; all three PQ consumers' oracle hashes
-    are unchanged (driver window r11). A NULL vector takes the
+    are unchanged. A NULL vector takes the
     fold's all-NULL-d path: every candidate compares equal, so the
     lowest code per block is emitted."""
     import numpy as np
@@ -753,7 +752,7 @@ def pq_lut(
     model-sized (|queries|·m·|codebook| rows, independent of corpus
     size), and an Arrow pair_scores_arrow rewrite measured FLAT in an
     interleaved same-JVM A/B (vec_pq_adc_topk 1.96 vs 1.93s min,
-    recall report 3.20 vs 3.16 — round 12) — the Python-stage latency
+    recall report 3.20 vs 3.16) — the Python-stage latency
     under the BroadcastExchange offsets the vectorization, and there
     is no scale-up payoff because the LUT does not grow with the
     corpus. Contrast sq_adc_topk, whose pair stream IS corpus-sized
@@ -937,10 +936,9 @@ def sq_adc_topk(
     (functions.vectors.pair_scores_arrow, metric ``sq_l2_9dp``) — the
     HOF ``zip_with``+``aggregate`` fold evaluates interpreted per
     element across |queries|·|corpus|·dim terms, the dominant cost of
-    vec_sq8_topk at every scale (same diagnosis as the round-11
-    pq_encode fix; an unrolled codegen sum was tried first and
-    measured 2x WORSE than the fold — a 64-term expression tree per
-    pair defeats JIT). Scores are bit-identical: per-term Spark ROUND
+    vec_sq8_topk at every scale (same diagnosis as pq_encode's; an
+    unrolled codegen sum measured 2x WORSE than the fold — a 64-term
+    expression tree per pair defeats JIT). Scores are bit-identical: per-term Spark ROUND
     semantics via the exact-tie decimal re-judge, int64 sum exact."""
     q = queries.select(
         F.col(id_col).alias("query_id"),

@@ -346,15 +346,13 @@ def stream_centroid_occupancy(spark: SparkSession, sf_dir: str) -> DataFrame:
     argmax equals the oracle's ROW_NUMBER formulation; occupancy
     reports order-independent extremes, exact under any micro-batch
     or partition split."""
-    from ..operators.similarity import label_centroids
-    from ..streaming.vec_stream import (
-        centroid_array,
-        centroid_occupancy,
-        scored_stream,
-    )
+    from ..operators.similarity import centroid_struct_array, label_centroids
+    from ..streaming.vec_stream import centroid_occupancy, scored_stream
 
     emb = load_table(spark, sf_dir, "embeddings")
-    cent_arr = centroid_array(label_centroids(emb))
+    cent_arr = centroid_struct_array(
+        label_centroids(emb).selectExpr("CAST(c_label AS INT) AS c_label", "cvec")
+    )
     return centroid_occupancy(scored_stream(emb, cent_arr)).orderBy("c_label")
 
 

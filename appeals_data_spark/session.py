@@ -59,6 +59,12 @@ RUNTIME_CONFS = {
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
     # Arrow transfer for the pandas-UDF operators and toPandas.
     "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # Whole-stage classes are otherwise named after the codegen stage
+    # id, which AQE assigns in the order concurrent stages finish, so a
+    # warm run of a query with concurrent stages can generate source
+    # that differs only in the class name and miss the code-generation
+    # cache (see CODEGEN_CACHE_ENTRIES).
+    "spark.sql.codegen.useIdInClassName": "false",
 }
 
 # Generated classes Spark's code-generation cache keeps per JVM

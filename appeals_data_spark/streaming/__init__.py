@@ -11,12 +11,15 @@ stateful logic the built-ins can't express.
 Every streaming computation here has a batch twin registered in
 ``queries/streaming_q.py`` with a DuckDB oracle; pytest
 (tests/test_streaming.py) proves stream-vs-batch parity on the same
-files.
+files. The stream defines no operator of its own where a batch one
+fits: the extracted event stream is the batch extractors' SQL with the
+stream bound as ``{events}`` (views.events.union_sql), and the
+centroid scorer folds with the batch assigners'
+``similarity.nearest_centroid_best``.
 """
 
 from .doc_stream import curate_docs, document_stream  # noqa: F401
 from .vec_stream import (  # noqa: F401
-    centroid_array,
     centroid_occupancy,
     embedding_stream,
     scored_stream,

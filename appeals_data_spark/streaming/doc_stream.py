@@ -87,8 +87,8 @@ def curate_docs(docs: DataFrame) -> DataFrame:
 def lm_score_map(corpus: DataFrame) -> DataFrame:
     """Train the unigram LM on a batch corpus and pack it into ONE row
     holding map<token, logprob DECIMAL(18,6)> — the broadcastable model
-    artifact for stream-side scoring (the centroid_array shape). The
-    log-probs follow the shared ``ml.unigram_lm`` determinism
+    artifact for stream-side scoring (the centroid_struct_array
+    shape). The log-probs follow the shared ``ml.unigram_lm`` determinism
     contract: ln is evaluated once per distinct token, rounded to
     6 dp, and cast to exact decimal BEFORE any aggregation."""
     from ..functions.text import tokens

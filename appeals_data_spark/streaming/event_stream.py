@@ -25,6 +25,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..session import tune
+from ..views.events import (
+    hearing_events,
+    transcription_events,
+    union_sql,
+    user_events,
+)
 
 _EVENTS_FALLBACK_SCHEMA = (
     "event_id long, ts timestamp, user_id long, event_type string, "
@@ -68,77 +74,19 @@ def event_stream(spark: SparkSession, events_dir: str) -> DataFrame:
 
 
 def extracted_event_stream(stream: DataFrame) -> DataFrame:
-    """Stateless extractor union over the live stream — the streaming
-    form of ``views.events.events_all`` restricted to the shapes that
-    need no state: raw projection, the NA-propagating hearing
-    relabel+patch (events.R:540-549), and the from/to transcript
-    fan-out (events.R:116-126), all per-row transforms that compose
-    with any downstream watermark/window. The batch-dim extractors
-    (orders/lineitem) would enter as stream-static joins — also
-    stateless. Batch twin: ``stream_event_union`` (hourly counts,
-    DuckDB oracle); parity pinned in tests/test_streaming.py."""
-    from ..functions.scalars import r_ifelse
-
-    raw = stream.select(
-        F.col("user_id").alias("entity_id"),
-        "event_type",
-        "ts",
-        F.col("value").alias("amount"),
-    )
-    h = stream.filter(F.col("event_type") == "signup").select(
-        "user_id",
-        "ts",
-        "value",
-        F.when(F.col("value") > 30, "H")
-        .when(F.col("value") > 20, "X")
-        .alias("disp"),
-        F.when(
-            F.col("value") > 10, F.col("ts") + F.expr("interval 3 days")
-        ).alias("clsdate"),
-    )
-    label = r_ifelse(
-        F.col("disp") == "H", F.lit("HEARING"), F.lit("HEARING_EXCEPTION")
-    )
-    patched = F.when(
-        (label == "HEARING_EXCEPTION") & F.col("clsdate").isNotNull(),
-        F.col("clsdate"),
-    ).otherwise(F.col("ts"))
-    hearing = h.select(
-        F.col("user_id").alias("entity_id"),
-        label.alias("event_type"),
-        patched.alias("ts"),
-        F.col("value").alias("amount"),
-    )
-    tr = (
-        stream.filter(F.col("event_type") == "error")
-        .select(
-            F.col("user_id").alias("entity_id"),
-            F.col("value").alias("amount"),
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.lit("to_transcript").alias("event_type"),
-                        F.col("ts").alias("ts"),
-                    ),
-                    F.struct(
-                        F.lit("from_transcript").alias("event_type"),
-                        (
-                            F.col("ts")
-                            + F.make_interval(mins=F.floor("value").cast("int"))
-                        ).alias("ts"),
-                    ),
-                )
-            ).alias("ev"),
-        )
-        .select(
-            "entity_id",
-            F.col("ev.event_type").alias("event_type"),
-            F.col("ev.ts").alias("ts"),
-            "amount",
-        )
-    )
-    return (
-        raw.unionByName(hearing).unionByName(tr).filter(F.col("ts").isNotNull())
+    """Stateless extractor union over the live stream: the batch
+    extractors' own SQL (raw projection, the NA-propagating hearing
+    relabel+patch of events.R:540-549, the from/to transcript fan-out
+    of events.R:116-126) with ``{events}`` bound to the stream. All
+    three are per-row, so they compose with any downstream watermark or
+    window; the batch-dim extractors (orders/lineitem) would enter as
+    stream-static joins, also stateless. Batch twin:
+    ``stream_event_union`` (hourly counts, DuckDB oracle); parity
+    pinned in tests/test_streaming.py."""
+    return union_sql(
+        stream.sparkSession,
+        [ex.sql for ex in (user_events, hearing_events, transcription_events)],
+        {"events": stream}.__getitem__,
     )
 
 

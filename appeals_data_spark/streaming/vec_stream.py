@@ -16,10 +16,10 @@ discipline as the IRLS/pegasos training loops.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.vectors import cosine
+from ..operators.similarity import nearest_centroid_best
 from ..session import tune
 
 _EMB_FALLBACK_SCHEMA = "vec_id long, embedding array<float>, label int"
@@ -44,43 +44,13 @@ def embedding_stream(spark: SparkSession, emb_dir: str) -> DataFrame:
     )
 
 
-def centroid_array(centroids: DataFrame) -> DataFrame:
-    """Collapse a (c_label, cvec) centroid table into ONE row holding a
-    label-sorted array<struct<c_label,cvec>> — the broadcastable model
-    artifact the stateless scorer folds over."""
-    return centroids.agg(
-        F.array_sort(
-            F.collect_list(
-                F.struct(F.col("c_label").cast("int").alias("c_label"), "cvec")
-            )
-        ).alias("cents")
-    )
-
-
-def nearest_centroid_struct(cents: Column, vec: Column) -> Column:
-    """Per-row argmax over the centroid array: fold keeping the
-    (c_label, c_cos) with the highest cosine; strict > keeps the FIRST
-    (lowest label) on exact ties — the same (cos DESC, c_label ASC)
-    order the window-ranked batch assigners use."""
-    init = F.struct(
-        F.lit(-1).cast("int").alias("c_label"),
-        F.lit(float("-inf")).alias("c_cos"),
-    )
-
-    def step(acc: Column, c: Column) -> Column:
-        cc = cosine(vec, c["cvec"])
-        return F.when(
-            cc > acc["c_cos"],
-            F.struct(c["c_label"].alias("c_label"), cc.alias("c_cos")),
-        ).otherwise(acc)
-
-    return F.aggregate(cents, init, step)
-
-
 def scored_stream(stream: DataFrame, cent_arr: DataFrame) -> DataFrame:
     """(vec_id, c_label, c_cos) for every incoming vector — stateless,
-    so it composes with any downstream watermark/aggregation."""
-    best = nearest_centroid_struct(F.col("cents"), F.col("embedding"))
+    so it composes with any downstream watermark/aggregation.
+    ``cent_arr`` is ``similarity.centroid_struct_array`` of an
+    int-labelled centroid table; the fold is the batch assigners' own
+    ``nearest_centroid_best``."""
+    best = nearest_centroid_best(F.col("_cents"), F.col("embedding"), "int")
     return (
         stream.crossJoin(F.broadcast(cent_arr))
         .withColumn("best", best)

@@ -1,63 +1,89 @@
-"""The derived event-log view — the reference's core abstraction.
+"""The derived event log, the reference's core abstraction.
 
-`R/events.R` converts wide tables into a long
-(entity, event_type, ts) stream via ~10 per-source extractors unioned
-at the end (events.R:923-991, SURVEY §1.4, R1, U1). Here each
-extractor is a lazy DataFrame built from one SQL text; `events_all`
-is a single union so Catalyst sees ONE plan covering extraction +
-union — scan sharing and pushdown happen across extractors, unlike
-the reference's 10 separate Oracle round trips (SURVEY §3.1).
+`R/events.R` turns wide tables into a long (entity, event_type, ts)
+stream with per-source extractors unioned at the end (events.R:923-991,
+SURVEY §1.4, R1, U1). Here every extractor is one SQL text, and
+:func:`union_sql` conforms and unions any set of them in ONE
+``spark.sql``, so Catalyst sees one plan covering extraction and union.
 
 Canonical schema: (entity_id long, event_type string, ts timestamp_ntz,
-amount double nullable). Unpivot-style extractors use SQL ``UNPIVOT``
-— the direct analog of tidyr `gather`.
+amount double nullable); over a stream ``ts`` stays the zoned
+timestamp its watermark needs. Unpivot-style extractors use SQL
+``UNPIVOT``, the direct analog of tidyr `gather`.
+
+The same SQL builds two plan shapes of the full log (see events_all):
+the granular union of the 14 per-extractor texts, and a fused union
+of one text per source table that emits all of that table's narrow
+events from a single scan.
 """
 
 from __future__ import annotations
 
-from functools import reduce, wraps
+from functools import partial, wraps
 from string import Formatter
 from typing import Callable
 
-from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
-from ..catalog import literal_dim, load_table, sized_for_compute
+from ..catalog import load_table, sized_for_compute
+from ..functions.scalars import SQL_R_IFELSE
 
 
-def _union_sql(
-    spark: SparkSession, sf_dir: str, branches: list[str], where: str = "TRUE"
+def union_sql(
+    spark: SparkSession,
+    branches: list[str],
+    frame: Callable[[str], DataFrame],
+    where: str = "TRUE",
 ) -> DataFrame:
     """Conformed union of extractor SELECTs, issued as ONE ``spark.sql``.
 
     Each branch is a SELECT whose output names are the canonical
-    columns (any order); each ``{table}`` it names is read through the
-    catalog. The canonical casts and the non-null ts filter wrap every
-    branch, so all branches agree on schema and union by position.
-    ``spark.sql`` binds the tables as temporary views and drops them
-    again before it returns; one statement is analysed once, where a
-    DataFrame union pays an analysis per branch and per union step."""
-    names = {name for b in branches for _, name, _, _ in Formatter().parse(b)}
-    frames = {name: load_table(spark, sf_dir, name) for name in names if name}
+    columns (any order); ``frame(name)`` is the DataFrame bound to each
+    ``{name}`` it reads (a catalog table, or a live stream). The
+    canonical casts and the non-null ts filter wrap every branch, so
+    all branches agree on schema and union by position. ``ts`` keeps
+    its sources' type: catalog.load_table reads every timestamp column
+    as TIMESTAMP_NTZ, and a stream's ts is a zoned TIMESTAMP, which its
+    watermark needs. ``spark.sql`` binds the frames as temporary
+    views and drops them again before it returns; one statement is
+    analysed once, where a DataFrame union pays an analysis per branch
+    and per union step."""
+    names = {name for b in branches for _, name, _, _ in Formatter().parse(b) if name}
+    frames = {name: frame(name) for name in names}
     union = "\nUNION ALL\n".join(
         "SELECT CAST(entity_id AS BIGINT) AS entity_id,"
         " CAST(event_type AS STRING) AS event_type,"
-        " CAST(ts AS TIMESTAMP_NTZ) AS ts, CAST(amount AS DOUBLE) AS amount"
+        " ts, CAST(amount AS DOUBLE) AS amount"
         f" FROM ({b}) WHERE ts IS NOT NULL"
         for b in branches
     )
     return spark.sql(f"SELECT * FROM ({union}) WHERE {where}", **frames)
 
 
+def _catalog(spark: SparkSession, sf_dir: str) -> Callable[[str], DataFrame]:
+    """Binds ``{table}`` to the catalog read of ``table`` and
+    ``{sized_table}`` to that read split for per-row compute
+    (catalog.sized_for_compute): a fused branch evaluates several event
+    slots per row, which must not run on one task when the export
+    arrives as a single split."""
+
+    def frame(name: str) -> DataFrame:
+        table = name.removeprefix("sized_")
+        df = load_table(spark, sf_dir, table)
+        return df if table == name else sized_for_compute(df)
+
+    return frame
+
+
 def _sql_extractor(select: Callable[[], str]):
     """Extractor ``(spark, sf_dir) -> DataFrame`` from a function that
     returns its SELECT text; the text stays on ``.sql`` so events_all
-    can union every branch in one statement."""
+    and the event stream can union many branches in one statement."""
     sql = select()
 
     @wraps(select)
     def extractor(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return _union_sql(spark, sf_dir, [sql])
+        return union_sql(spark, [sql], _catalog(spark, sf_dir))
 
     extractor.sql = sql
     return extractor
@@ -100,24 +126,26 @@ def return_events() -> str:
         FROM {lineitem} WHERE l_returnflag = 'R'"""
 
 
-# End-state classifier: code -> event label, inner join => also filters
-# (the reference's EventEndStateClassifier merge, R/events.R:863-865 +
-# constants.R:15-18 — J14). A literal broadcast dim, not a when-chain,
-# so adding end states is data, not code.
+# End-state classifier: code -> event label; a code it does not list
+# emits no event (the reference's EventEndStateClassifier merge,
+# R/events.R:863-865 + constants.R:15-18 — J14). The one definition of
+# the end states, read by the granular and the fused orders branch as
+# a generated CASE, so adding end states is data, not code.
 END_STATE_CLASSIFIER = (("F", "order_finished"), ("P", "order_in_process"))
 
-
-_END_STATE_ROWS = ", ".join(f"('{c}', '{t}')" for c, t in END_STATE_CLASSIFIER)
+_END_STATE_CASE = (
+    "CASE o_orderstatus "
+    + " ".join(f"WHEN '{c}' THEN '{t}'" for c, t in END_STATE_CLASSIFIER)
+    + " END"
+)
 
 
 @_sql_extractor
 def end_state_events() -> str:
     return f"""
-        SELECT /*+ broadcast(c) */ o_custkey AS entity_id, c.event_type,
+        SELECT o_custkey AS entity_id, {_END_STATE_CASE} AS event_type,
                o_orderdate AS ts, o_totalprice AS amount
-        FROM {{orders}}
-        JOIN (VALUES {_END_STATE_ROWS}) AS c(o_orderstatus, event_type)
-          USING (o_orderstatus)"""
+        FROM {{orders}} WHERE {_END_STATE_CASE} IS NOT NULL"""
 
 
 @_sql_extractor
@@ -141,42 +169,44 @@ def session_start_events() -> str:
         WHERE _prev IS NULL OR ts >= _prev + INTERVAL 30 MINUTES"""
 
 
+# The hearing relabel+patch over a signup row's (ts, value), shared by
+# hearing_events and the fused clickstream branch (events.R:540-549).
+# The disposition is derived deterministically, because the synthetic
+# tables have no nullable disposition column: H/X/NULL banded on
+# value, close date ts+3d for value>10.
+_HEARING_DISP = "CASE WHEN value > 30 THEN 'H' WHEN value > 20 THEN 'X' END"
+_HEARING_CLSDATE = "CASE WHEN value > 10 THEN ts + INTERVAL 3 DAYS END"
+_HEARING_LABEL = SQL_R_IFELSE.format(
+    cond=f"({_HEARING_DISP}) = 'H'", yes="'HEARING'", no="'HEARING_EXCEPTION'"
+)
+_HEARING_TS = (
+    f"CASE WHEN ({_HEARING_LABEL}) = 'HEARING_EXCEPTION'"
+    f" AND ({_HEARING_CLSDATE}) IS NOT NULL THEN {_HEARING_CLSDATE} ELSE ts END"
+)
+
+# Check-in date of a transcription-loc row: ts + floor(value) minutes.
+_FROM_TRANSCRIPT_TS = "ts + make_interval(0, 0, 0, 0, 0, CAST(FLOOR(value) AS INT), 0)"
+
+
 @_sql_extractor
 def hearing_events() -> str:
     """Relabel+patch extractor (events.R:540-549):
     ``EVENT_TYPE = ifelse(HEARING_DISP == "H", "HEARING",
     "HEARING_EXCEPTION")`` with R's NA-PROPAGATING ifelse — a NULL
     disposition yields a NULL label, never the else branch (the
-    when/otherwise trap; see functions.scalars.r_ifelse) — then the
+    when/otherwise trap; see functions.scalars.SQL_R_IFELSE) — then the
     CLSDATE patch: exceptions with a non-null close date take it as
     their event date. NULL-labelled rows are NOT patched (R's
     ``EVENT_TYPE == "HEARING_EXCEPTION"`` is NA for them; dplyr-style
     NA-as-false — the literal base-R subscript-assignment would error
     on NA subscripts, so the reference implicitly never sees NULL
     dispositions with close dates; we pin the defined behavior).
-
-    The synthetic tables have no nullable disposition column, so one is
-    derived deterministically from the clickstream: 'signup' rows act
-    as hearing records, disp = H/X/NULL banded on value, close date =
-    ts+3d for value>10.
+    'signup' rows of the clickstream act as hearing records.
     """
-    from ..functions.scalars import SQL_R_IFELSE
-
-    label = SQL_R_IFELSE.format(
-        cond="disp = 'H'", yes="'HEARING'", no="'HEARING_EXCEPTION'"
-    )
     return f"""
-        SELECT user_id AS entity_id, event_type,
-               CASE WHEN event_type = 'HEARING_EXCEPTION' AND clsdate IS NOT NULL
-                    THEN clsdate ELSE ts END AS ts,
-               value AS amount
-        FROM (SELECT user_id, ts, value, clsdate, {label} AS event_type
-              FROM (SELECT user_id, ts, value,
-                           CASE WHEN value > 30 THEN 'H'
-                                WHEN value > 20 THEN 'X' END AS disp,
-                           CASE WHEN value > 10 THEN ts + INTERVAL 3 DAYS
-                                END AS clsdate
-                    FROM {{events}} WHERE event_type = 'signup'))"""
+        SELECT user_id AS entity_id, {_HEARING_LABEL} AS event_type,
+               {_HEARING_TS} AS ts, value AS amount
+        FROM {{events}} WHERE event_type = 'signup'"""
 
 
 @_sql_extractor
@@ -185,15 +215,13 @@ def transcription_events() -> str:
     gather; also .parseAbeyanceLocs:164-180): one location-log row
     emits TWO events — TO_X at the check-out date and FROM_X at the
     check-in date — via ``UNPIVOT`` (tidyr ``gather``). 'error' rows
-    stand in for transcription-loc rows; the check-in date is derived
-    as ts + floor(value) minutes.
+    stand in for transcription-loc rows.
     """
-    return """
+    return f"""
         SELECT * FROM (
           SELECT user_id AS entity_id, value AS amount, ts AS to_transcript,
-                 ts + make_interval(0, 0, 0, 0, 0, CAST(FLOOR(value) AS INT), 0)
-                   AS from_transcript
-          FROM {events} WHERE event_type = 'error'
+                 {_FROM_TRANSCRIPT_TS} AS from_transcript
+          FROM {{events}} WHERE event_type = 'error'
         ) UNPIVOT INCLUDE NULLS
           (ts FOR event_type IN (to_transcript, from_transcript))"""
 
@@ -362,210 +390,126 @@ EXTRACTORS = (
 
 
 # ---------------------------------------------------------------------------
-# Fused per-table extraction. unionByName of the granular extractors
-# re-scans each source once per branch (15 scans for the 14-extractor
-# log); the narrow per-row extractors that share a table are instead
-# computed from ONE scan as an array of conditional event structs,
-# exploded and null-filtered — the same multiset from 6 scans. At 100 TB
-# the duplicate fact-table scans are the dominant cost of the union,
-# so events_all() uses this path when no caller predicate needs
-# per-branch pushdown. Parity with the granular union is pinned in
-# tests (and the shared EVENTS_ALL_SQL oracle checks both).
+# Fused per-table extraction. The granular union scans each source once
+# per branch (15 scans for the 14 extractors). A fused branch reads its
+# table ONCE and emits an array of conditional event slots, one per
+# granular extractor it replaces: ``inline`` turns the array into rows,
+# and union_sql's non-null ts filter drops the slots whose gate was
+# false (a NULL slot inlines as an all-NULL row). Same multiset from 6
+# scans. Parity with the granular union is pinned in tests, and the
+# shared EVENTS_ALL_SQL oracle checks both.
 # ---------------------------------------------------------------------------
 
 
-def _ev(entity: Column, event_type: Column, ts: Column, amount: Column) -> Column:
-    """One event-candidate struct with the canonical field types, so
-    every element of the conditional array agrees on shape. The entity
-    rides in the struct because fused branches of one scan can
-    attribute events to different entities (supplier for shipments,
-    customer for assignments)."""
-    return F.struct(
-        entity.cast("long").alias("entity_id"),
-        event_type.cast("string").alias("event_type"),
-        ts.cast("timestamp_ntz").alias("ts"),
-        amount.cast("double").alias("amount"),
+def _slot(entity: str, amount: str, event_type: str, ts: str, gate: str = "") -> str:
+    """One event slot of a fused branch: a struct with the canonical
+    field names, NULL where ``gate`` is not true. The entity rides in
+    the struct because slots of one scan can attribute events to
+    different entities (supplier for shipments, customer for
+    assignments)."""
+    ev = (
+        f"named_struct('entity_id', {entity}, 'event_type', {event_type},"
+        f" 'ts', {ts}, 'amount', {amount})"
     )
+    return f"IF({gate}, {ev}, NULL)" if gate else ev
 
 
-def _explode_events(base: DataFrame) -> DataFrame:
-    """(_evs) -> conformed long events. Null slots (branch gate false)
-    and null-ts events drop AFTER the generate — explode emits null
-    elements as rows, and both predicates stay inside whole-stage
-    codegen."""
-    return (
-        base.select(F.explode("_evs").alias("_e"))
-        .where(F.col("_e").isNotNull() & F.col("_e.ts").isNotNull())
-        .select("_e.entity_id", "_e.event_type", "_e.ts", "_e.amount")
-    )
+def _fused(source: str, *slots: str) -> str:
+    """A fused branch: every slot of each ``source`` row, inlined."""
+    return f"SELECT inline(array({', '.join(slots)})) FROM {source}"
 
 
-def _orders_narrow_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+@_sql_extractor
+def fused_order_events() -> str:
     """order_events + end_state_events + milestone_events from one
-    orders scan. The end-state classifier stays a broadcast literal dim
-    (J14's merge-as-data design) — joined left so unmatched statuses
-    just contribute a null slot."""
-    # sized_for_compute: the 5-slot conditional explode is per-row
-    # compute that must not be serialized onto one task when the export
-    # arrives as a single split; no-op on a properly-split layout.
-    o = sized_for_compute(load_table(spark, sf_dir, "orders"))
-    classifier = literal_dim(
-        spark, END_STATE_CLASSIFIER, "o_orderstatus string, event_type string"
-    )
-    oc = o.join(F.broadcast(classifier), "o_orderstatus", "left")
-    ent = F.col("o_custkey")
-    od, tp, st = F.col("o_orderdate"), F.col("o_totalprice"), F.col("o_orderstatus")
-    not_p = st != "P"
-    evs = F.array(
-        _ev(ent, F.lit("order_placed"), od, tp),
-        F.when(
-            F.col("event_type").isNotNull(), _ev(ent, F.col("event_type"), od, tp)
-        ),
-        F.when(
-            not_p, _ev(ent, F.lit("DOCKET"), od + F.expr("interval 7 days"), tp)
-        ),
-        F.when(
+    orders scan; an unmatched status leaves its end-state slot NULL."""
+    order = partial(_slot, "o_custkey", "o_totalprice")
+    od, not_p = "o_orderdate", "o_orderstatus <> 'P'"
+    return _fused(
+        "{sized_orders}",
+        order("'order_placed'", od),
+        order(_END_STATE_CASE, od, f"{_END_STATE_CASE} IS NOT NULL"),
+        order("'DOCKET'", f"{od} + INTERVAL 7 DAYS", not_p),
+        order(
+            "'SOC'", f"CASE WHEN o_totalprice > 50000 THEN {od} + INTERVAL 30 DAYS END",
             not_p,
-            _ev(
-                ent,
-                F.lit("SOC"),
-                F.when(tp > 50000, od + F.expr("interval 30 days")),
-                tp,
-            ),
         ),
-        F.when(
-            not_p,
-            _ev(
-                ent,
-                F.lit("CERTIFICATION"),
-                F.when(st == "F", od + F.expr("interval 60 days")),
-                tp,
-            ),
+        order(
+            "'CERTIFICATION'",
+            f"CASE WHEN o_orderstatus = 'F' THEN {od} + INTERVAL 60 DAYS END", not_p,
         ),
     )
-    return _explode_events(oc.select(evs.alias("_evs")))
 
 
-def _lineitem_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+@_sql_extractor
+def fused_lineitem_events() -> str:
     """shipment_events + return_events + assignment_events from one
     lineitem scan. The assignment gather needs the order's customer, so
     the scan rides a LEFT join to orders (left, not inner, so the
-    supplier-attributed branches keep every line even if a dangling
-    order key ever appeared); the customer-attributed structs gate on
-    the join matching. Bucket both tables on the order key and this
-    join shuffles nothing."""
-    # sized_for_compute: the probe side carries the 4-slot explode and
-    # the interval arithmetic; a single-split export would run all of
-    # it on one task (measured 3x the branch cost at sf0.1). No-op when
-    # the lake layout already gives the scan enough splits.
-    li = sized_for_compute(load_table(spark, sf_dir, "lineitem"))
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    j = li.join(o, li["l_orderkey"] == o["o_orderkey"], "left")
-    supp, cust = F.col("l_suppkey"), F.col("o_custkey")
-    sd, ep = F.col("l_shipdate"), F.col("l_extendedprice")
-    evs = F.array(
-        _ev(supp, F.lit("line_shipped"), sd, ep),
-        F.when(
-            F.col("l_returnflag") == "R",
-            _ev(supp, F.lit("line_returned"), sd, ep),
-        ),
-        F.when(
-            cust.isNotNull(),
-            _ev(cust, F.lit("ASSIGNMENT"), sd - F.expr("interval 7 days"), ep),
-        ),
-        F.when(
-            cust.isNotNull(),
-            _ev(
-                cust,
-                F.lit("DRAFT_DECISION"),
-                F.when(
-                    F.col("l_quantity") > 25, sd + F.expr("interval 2 days")
-                ),
-                ep,
-            ),
+    supplier-attributed slots keep every line even if a dangling order
+    key ever appeared); the customer-attributed slots gate on the join
+    matching. Bucket both tables on the order key and this join
+    shuffles nothing."""
+    supplier = partial(_slot, "l_suppkey", "l_extendedprice")
+    customer = partial(_slot, "o_custkey", "l_extendedprice")
+    matched = "o_custkey IS NOT NULL"
+    return _fused(
+        "{sized_lineitem} LEFT JOIN (SELECT o_orderkey, o_custkey FROM {orders})"
+        " ON l_orderkey = o_orderkey",
+        supplier("'line_shipped'", "l_shipdate"),
+        supplier("'line_returned'", "l_shipdate", "l_returnflag = 'R'"),
+        customer("'ASSIGNMENT'", "l_shipdate - INTERVAL 7 DAYS", matched),
+        customer(
+            "'DRAFT_DECISION'",
+            "CASE WHEN l_quantity > 25 THEN l_shipdate + INTERVAL 2 DAYS END", matched,
         ),
     )
-    return _explode_events(j.select(evs.alias("_evs")))
 
 
-def _clickstream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+@_sql_extractor
+def fused_clickstream_events() -> str:
     """ALL seven clickstream extractors (user, hearing, transcription,
     session_start, creation, substitution, review run-parser) from ONE
     events scan and ONE shuffle.
 
     The per-row shapes (raw projection, NA-propagating relabel+patch,
-    from/to fan-out) are conditional struct slots. The window shapes
-    ride the same lag: `prev IS NULL | gap > 30min` marks a session
-    start, and because the window orders by (ts, event_id), the
-    first-row-per-user condition `prev IS NULL` lands exactly on
-    min(ts) — so the creation/substitution aggregates become two more
-    conditional slots on the first row instead of two scans + two
-    groupBy shuffles. The substitution gate (customer BUILDING
-    segment) joins broadcast before the window.
+    from/to fan-out) are gated slots. The window shapes ride the same
+    lag: ``_prev IS NULL OR gap >= 30min`` marks a session start, and
+    because the window orders by (ts, event_id), the first-row-per-user
+    condition ``_prev IS NULL`` lands exactly on min(ts), so the
+    creation and substitution aggregates become two more slots on the
+    first row instead of two scans and two groupBy shuffles. The
+    substitution gate (customer BUILDING segment) joins broadcast
+    before the window.
 
-    The ts-not-null pre-filter is exactly _union_sql's postcondition
-    hoisted to the scan (every granular branch drops null-ts rows),
-    and it keeps the nulls-first window ordering from electing a
-    null-ts row as a user's first event."""
-    from pyspark.sql.window import Window
-
-    from ..functions.scalars import r_ifelse
-
-    e = load_table(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
-    bld = (
-        load_table(spark, sf_dir, "customer")
-        .filter(F.col("c_mktsegment") == "BUILDING")
-        .select(F.col("c_custkey").alias("user_id"), F.lit(True).alias("_bld"))
+    The ts-not-null pre-filter is union_sql's postcondition hoisted to
+    the scan (every granular branch drops null-ts rows), and it keeps
+    the nulls-first window ordering from electing a null-ts row as a
+    user's first event."""
+    valued = partial(_slot, "user_id", "value")
+    marker = partial(_slot, "user_id", "CAST(NULL AS DOUBLE)")
+    first, view = "_prev IS NULL", "event_type = 'view'"
+    return _fused(
+        """(
+          SELECT /*+ broadcast(b) */ user_id, event_type, ts, value, _bld,
+                 LAG(ts) OVER w AS _prev,
+                 LAG(event_type) OVER w AS _prev_t,
+                 LEAD(event_type) OVER w AS _next_t
+          FROM {events}
+          LEFT JOIN (SELECT c_custkey AS user_id, TRUE AS _bld FROM {customer}
+                     WHERE c_mktsegment = 'BUILDING') b USING (user_id)
+          WHERE ts IS NOT NULL
+          WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))""",
+        valued("event_type", "ts"),
+        valued(_HEARING_LABEL, _HEARING_TS, "event_type = 'signup'"),
+        valued("'to_transcript'", "ts", "event_type = 'error'"),
+        valued("'from_transcript'", _FROM_TRANSCRIPT_TS, "event_type = 'error'"),
+        marker("'session_started'", "ts", f"{first} OR ts >= _prev + INTERVAL 30 MINUTES"),
+        marker("'account_created'", "ts", first),
+        marker("'segment_substitution'", "ts", f"{first} AND _bld"),
+        marker("'to_review'", "ts", f"{view} AND (_prev_t IS NULL OR _prev_t <> 'view')"),
+        marker("'from_review'", "ts", f"{view} AND (_next_t IS NULL OR _next_t <> 'view')"),
     )
-    e = e.join(F.broadcast(bld), "user_id", "left")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    base = (
-        e.withColumn("_prev", F.lag("ts").over(w))
-        .withColumn("_prev_t", F.lag("event_type").over(w))
-        .withColumn("_next_t", F.lead("event_type").over(w))
-    )
-
-    ts, v = F.col("ts"), F.col("value")
-    is_signup = F.col("event_type") == "signup"
-    is_error = F.col("event_type") == "error"
-    is_view = F.col("event_type") == "view"
-    is_first = F.col("_prev").isNull()
-    new_sess = is_first | (
-        ts >= F.col("_prev") + F.expr("interval 30 minutes")
-    )
-    run_start = is_view & (F.col("_prev_t").isNull() | (F.col("_prev_t") != "view"))
-    run_end = is_view & (F.col("_next_t").isNull() | (F.col("_next_t") != "view"))
-    disp = F.when(v > 30, "H").when(v > 20, "X")
-    clsdate = F.when(v > 10, ts + F.expr("interval 3 days"))
-    label = r_ifelse(disp == "H", F.lit("HEARING"), F.lit("HEARING_EXCEPTION"))
-    patched = F.when(
-        (label == "HEARING_EXCEPTION") & clsdate.isNotNull(), clsdate
-    ).otherwise(ts)
-    null_amt = F.lit(None).cast("double")
-    ent = F.col("user_id")
-    evs = F.array(
-        _ev(ent, F.col("event_type"), ts, v),
-        F.when(is_signup, _ev(ent, label, patched, v)),
-        F.when(is_error, _ev(ent, F.lit("to_transcript"), ts, v)),
-        F.when(
-            is_error,
-            _ev(
-                ent,
-                F.lit("from_transcript"),
-                ts + F.make_interval(mins=F.floor(v).cast("int")),
-                v,
-            ),
-        ),
-        F.when(new_sess, _ev(ent, F.lit("session_started"), ts, null_amt)),
-        F.when(is_first, _ev(ent, F.lit("account_created"), ts, null_amt)),
-        F.when(
-            is_first & F.col("_bld").isNotNull(),
-            _ev(ent, F.lit("segment_substitution"), ts, null_amt),
-        ),
-        F.when(run_start, _ev(ent, F.lit("to_review"), ts, null_amt)),
-        F.when(run_end, _ev(ent, F.lit("from_review"), ts, null_amt)),
-    )
-    return _explode_events(base.select(evs.alias("_evs")))
 
 
 # Same multiset as EXTRACTORS from 6 source scans (orders x2 narrow+
@@ -575,9 +519,9 @@ def _clickstream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 # small conditional subset, which fusing would inflate to the full
 # orders event set.
 FUSED_EXTRACTORS = (
-    _orders_narrow_events,
-    _lineitem_events,
-    _clickstream_events,
+    fused_order_events,
+    fused_lineitem_events,
+    fused_clickstream_events,
     ssoc_events,
 )
 
@@ -715,30 +659,26 @@ EVENTS_ALL_SQL = f"""
 
 
 def events_all(spark: SparkSession, sf_dir: str, where: str | None = None) -> DataFrame:
-    """Union of all extractors — one Catalyst plan, one pass.
+    """Union of all extractors: one SQL statement, one Catalyst plan.
 
     ``where`` mirrors the reference's ``event_all(con, join, where)``
     composability hook (events.R:923-991): an optional SQL predicate
-    over the unified log. Catalyst pushes it into every union branch,
-    so a selective predicate prunes each source scan. The global
-    dummy-entity exclusions (constants.R:1-7) are always applied.
+    over the unified log. The global dummy-entity exclusions
+    (constants.R:1-7) are always applied.
 
-    Physical strategy: with a caller ``where`` the granular
-    per-extractor union is used, as one SQL statement — Catalyst
-    pushes the predicate into every branch, so a selective filter
-    prunes each scan (u5's documented behavior). Without one, the
-    full log is being materialized anyway, and the fused per-table
-    form (6 scans, not 15) wins; an event_type/ts predicate cannot be
-    pushed below a generate, but an entity_id one still reaches the
-    fused scans (entity_id passes through the explode untouched).
-    Every branch of either form has the canonical schema, so they
-    union by position.
+    Plan shape: with a caller ``where`` the granular union is used,
+    because Catalyst pushes the predicate into every branch and a
+    selective filter prunes each source scan; an event_type or ts
+    predicate cannot reach below a fused branch's ``inline``, so there
+    the fused form scans and explodes every row first (u5 at sf0.1:
+    0.46 s granular, 0.97 s fused). Without one the whole log is
+    materialized anyway, and the fused form's 6 scans beat the
+    granular 15 (a 10x probe of sf0.1, 4 cores: 5.9 s against 6.2 s).
+    Both shapes union the same canonical branches in one statement.
     """
-    excl = f"entity_id NOT IN ({_EXCL})"
-    if where is None:
-        return reduce(
-            DataFrame.union, (ex(spark, sf_dir) for ex in FUSED_EXTRACTORS)
-        ).where(excl)
-    return _union_sql(
-        spark, sf_dir, [ex.sql for ex in EXTRACTORS], f"{excl} AND ({where})"
+    extractors, pred = FUSED_EXTRACTORS, f"entity_id NOT IN ({_EXCL})"
+    if where is not None:
+        extractors, pred = EXTRACTORS, f"{pred} AND ({where})"
+    return union_sql(
+        spark, [ex.sql for ex in extractors], _catalog(spark, sf_dir), pred
     )

@@ -129,31 +129,6 @@ def test_mmr_picks_are_more_diverse_than_pure_topk(spark, emb):
     assert improved >= 1
 
 
-def test_cdc_stateless_twin_bit_equal(spark):
-    """The stream-safe HOF form and the exploded batch form must agree
-    row-for-row — the parity gate that lets the streaming ingest path
-    reuse the batch corpus's chunk hashes."""
-    from appeals_data_spark.functions.text import cdc_chunks_stateless
-
-    d = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
-    a = sorted(map(tuple, cdc_chunks(d, "text", "doc_id").collect()))
-    b = sorted(map(tuple, cdc_chunks_stateless(d, "text", "doc_id").collect()))
-    assert a == b and len(a) > 100
-    # short docs (1 <= n < w) crashed the stateless form's
-    # sequence(1, 0) before round 9's review fix — both forms must
-    # emit the single whole-doc chunk
-    short = spark.createDataFrame(
-        [(1, "tiny"), (2, "a"), (3, "exactly8"), (4, "")],
-        "doc_id long, text string",
-    )
-    sa = sorted(map(tuple, cdc_chunks(short, "text", "doc_id").collect()))
-    sb = sorted(
-        map(tuple, cdc_chunks_stateless(short, "text", "doc_id").collect())
-    )
-    assert sa == sb
-    assert [r[0] for r in sa] == [1, 2, 3]  # empty doc -> no chunk
-
-
 def test_mann_whitney_matches_numpy_rederivation(spark):
     """U and the tie-corrected z re-derived in pure NumPy from the raw
     rows must match the distributed midrank computation."""

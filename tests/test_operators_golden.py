@@ -523,8 +523,8 @@ def test_fused_event_union_parity(spark):
     """events_all()'s fused plan (len(FUSED_EXTRACTORS) branches over
     one narrow scan per source table) must produce exactly the granular
     len(EXTRACTORS)-extractor union's multiset — same rows, same
-    duplicates, incl. the NULL-labelled hearing rows r_ifelse
-    retains."""
+    duplicates, incl. the NULL-labelled hearing rows the NA-propagating
+    SQL_R_IFELSE label retains."""
     from functools import reduce
 
     from pyspark.sql import DataFrame
@@ -652,7 +652,7 @@ def test_lineitem_fusion_survives_dangling_order_keys(spark):
                 )
             ),
         )
-        fused = ev._lineitem_events(spark, "unused")
+        fused = ev.fused_lineitem_events(spark, "unused")
         key = lambda df: sorted(  # noqa: E731
             (r["entity_id"], r["event_type"], r["ts"], r["amount"])
             for r in df.collect()
@@ -848,9 +848,9 @@ def test_nearest_centroid_fold_tiebreak(spark):
     # (cos DESC, label ASC) order the window-ranked assigners use.
     import pyspark.sql.functions as F
 
-    from appeals_data_spark.streaming.vec_stream import (
-        centroid_array,
-        nearest_centroid_struct,
+    from appeals_data_spark.operators.similarity import (
+        centroid_struct_array,
+        nearest_centroid_best,
     )
 
     cents = spark.createDataFrame(
@@ -858,9 +858,9 @@ def test_nearest_centroid_fold_tiebreak(spark):
     )
     probe = spark.createDataFrame(
         [([1.0, 1.0],)], "embedding array<float>"
-    ).crossJoin(F.broadcast(centroid_array(cents)))
+    ).crossJoin(F.broadcast(centroid_struct_array(cents)))
     best = probe.select(
-        nearest_centroid_struct(F.col("cents"), F.col("embedding")).alias("b")
+        nearest_centroid_best(F.col("_cents"), F.col("embedding"), "int").alias("b")
     ).first()["b"]
     assert best["c_label"] == 1
 
@@ -1202,6 +1202,7 @@ def test_cdc_chunk_stream_matches_expression_spec(spark):
             (7, "café naïve résumé " * 20),  # non-ASCII
             (8, "x" * 7),                    # exactly w-1 chars
             (9, "y" * 8),                    # exactly w chars (cut at end excluded)
+            (11, "a"),                       # one char -> 1 chunk
             # "wxyzaaca" has base-31 gram hash % 64 == 0, so every
             # repetition fires a cut (verified by construction)
             (10, "the quick wxyzaaca brown fox jumps over " * 40),

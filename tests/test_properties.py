@@ -192,21 +192,17 @@ def test_sessionize_invariants(spark, rows):
 )
 @_hyp
 def test_r_ifelse_null_propagation(spark, disps):
-    """r_ifelse must mirror R's ifelse: NA condition -> NA result,
-    NEVER the else-branch (the when/otherwise trap)."""
-    from pyspark.sql import functions as F
-
-    from appeals_data_spark.functions.scalars import r_ifelse
+    """SQL_R_IFELSE must mirror R's ifelse: NA condition -> NA result,
+    NEVER the else-branch (the CASE ... ELSE trap)."""
+    from appeals_data_spark.functions.scalars import SQL_R_IFELSE
 
     df = spark.createDataFrame([(i, d) for i, d in enumerate(disps)], "i int, disp string")
+    label = SQL_R_IFELSE.format(
+        cond="disp = 'H'", yes="'HEARING'", no="'HEARING_EXCEPTION'"
+    )
     out = {
         r["i"]: r["label"]
-        for r in df.select(
-            "i",
-            r_ifelse(
-                F.col("disp") == "H", F.lit("HEARING"), F.lit("HEARING_EXCEPTION")
-            ).alias("label"),
-        ).collect()
+        for r in df.selectExpr("i", f"{label} AS label").collect()
     }
     for i, d in enumerate(disps):
         expected = None if d is None else ("HEARING" if d == "H" else "HEARING_EXCEPTION")
@@ -372,6 +368,7 @@ def _events_case(draw):
 @_hyp
 def test_fused_clickstream_matches_granular_on_adversarial(spark, rows):
     import appeals_data_spark.views.events as ev
+    from conftest import SF_SMOKE
 
     df = spark.createDataFrame(
         rows,
@@ -404,9 +401,9 @@ def test_fused_clickstream_matches_granular_on_adversarial(spark, rows):
 
         granular = reduce(
             DataFrame.unionByName,
-            (ex(spark, "/root/testdata/sf0.001") for ex in granular_parts),
+            (ex(spark, SF_SMOKE) for ex in granular_parts),
         )
-        fused = ev._clickstream_events(spark, "/root/testdata/sf0.001")
+        fused = ev.fused_clickstream_events(spark, SF_SMOKE)
         key = lambda df: sorted(  # noqa: E731
             (
                 r["entity_id"],

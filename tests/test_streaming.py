@@ -288,22 +288,32 @@ def embeddings_dir(tmp_path_factory):
     return str(d)
 
 
+def _centroid_array(spark):
+    """The int-labelled centroid array scored_stream folds over, trained
+    on the batch table."""
+    from appeals_data_spark.catalog import load_table
+    from appeals_data_spark.operators.similarity import (
+        centroid_struct_array,
+        label_centroids,
+    )
+
+    cents = label_centroids(load_table(spark, SF_SMOKE, "embeddings"))
+    return centroid_struct_array(
+        cents.selectExpr("CAST(c_label AS INT) AS c_label", "cvec")
+    ).localCheckpoint()
+
+
 def test_centroid_occupancy_parity(spark, embeddings_dir):
     # Online nearest-centroid scoring: the centroid index is trained on
     # the batch table (model-as-data), broadcast into the stream, and
     # the streamed occupancy must equal the batch twin exactly.
-    from appeals_data_spark.catalog import load_table
-    from appeals_data_spark.operators.similarity import label_centroids
     from appeals_data_spark.streaming import (
-        centroid_array,
         centroid_occupancy,
         embedding_stream,
         scored_stream,
     )
 
-    cent_arr = centroid_array(
-        label_centroids(load_table(spark, SF_SMOKE, "embeddings"))
-    ).localCheckpoint()
+    cent_arr = _centroid_array(spark)
     stream_out = run_to_memory(
         spark,
         centroid_occupancy(
@@ -320,16 +330,9 @@ def test_scored_stream_is_stateless(spark, embeddings_dir):
     # The scoring stage must stay append-able (no state store): a
     # stateless projection drains in append mode without complaint.
     from appeals_data_spark.catalog import load_table
-    from appeals_data_spark.operators.similarity import label_centroids
-    from appeals_data_spark.streaming import (
-        centroid_array,
-        embedding_stream,
-        scored_stream,
-    )
+    from appeals_data_spark.streaming import embedding_stream, scored_stream
 
-    cent_arr = centroid_array(
-        label_centroids(load_table(spark, SF_SMOKE, "embeddings"))
-    ).localCheckpoint()
+    cent_arr = _centroid_array(spark)
     out = run_to_memory(
         spark,
         scored_stream(embedding_stream(spark, embeddings_dir), cent_arr),
@@ -609,23 +612,21 @@ def test_mm_perceptual_hash_parity(spark, docs_dir):
 
 
 def test_cdc_chunking_parity(spark, docs_dir):
-    """The row-local CDC chunking projection (cdc_chunks_stateless) is
-    append-mode stream-safe — a micro-batch ingest must emit the
-    identical (doc_id, chunk_len, h) chunk rows the batch form
+    """The CDC chunk producer (cdc_chunk_stream, a row-local
+    mapInPandas) is append-mode stream-safe — a micro-batch ingest must
+    emit the identical (doc_id, chunk_len, h) chunk rows the batch form
     produces, so chunk-level dedup can run against a stream landing
     zone and join the frozen corpus's chunk-hash table unchanged."""
-    from appeals_data_spark.functions.text import cdc_chunks_stateless
+    from appeals_data_spark.functions.text import cdc_chunk_stream
     from appeals_data_spark.streaming.doc_stream import document_stream
 
     streamed = run_to_memory(
         spark,
-        cdc_chunks_stateless(
-            document_stream(spark, docs_dir), "text", "doc_id"
-        ),
+        cdc_chunk_stream(document_stream(spark, docs_dir), "text", "doc_id"),
         "cdc_chunk_sink",
         output_mode="append",
     )
-    batch = cdc_chunks_stateless(
+    batch = cdc_chunk_stream(
         spark.read.parquet(f"{SF_SMOKE}/documents.parquet"), "text", "doc_id"
     )
     cols = ["doc_id", "chunk_len", "h"]
